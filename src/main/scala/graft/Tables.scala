@@ -26,22 +26,62 @@ object Tables {
   // the next read — in OSS Spark `SparkSession.stop()` stops the context,
   // so `isStopped` IS the end-of-session signal — and `evict` gives
   // callers an explicit per-session hook.
+  //
+  // The text-SQL surface shares this memo: [[sqlRef]] names a session temp
+  // view over the memoized reader, so a SQL query and a DataFrame query
+  // resolve to the SAME relation — one schema, one file-listing snapshot,
+  // no footer-read job per query build. The snapshot is the reader's: files
+  // added under an SF dir stay invisible to both surfaces until `evict`,
+  // which drops the views together with the readers (a stopped session's
+  // views die with its catalog, which the purge releases).
   private val readerCache =
     new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
   private def purgeStopped(): Unit =
     readerCache.keysIterator.filter(_._1.sparkContext.isStopped).toList
       .foreach(readerCache.remove)
-  /** Drop every memoized reader of `spark` — for explicit lifecycle
-    * management; stopped sessions are purged automatically on later reads. */
+  /** Drop every memoized reader of `spark`, and the [[sqlRef]] views over
+    * them — for explicit lifecycle management and to refresh the file
+    * listings; stopped sessions are purged automatically on later reads. */
   def evict(spark: SparkSession): Unit =
-    readerCache.keysIterator.filter(_._1 eq spark).toList
-      .foreach(readerCache.remove)
+    readerCache.keysIterator.filter(_._1 eq spark).toList.foreach { k =>
+      readerCache.remove(k)
+      spark.sessionState.catalog.dropTempView(viewName(k._2, k._3))
+    }
   private[graft] def cachedReadersFor(spark: SparkSession): Int =
     readerCache.keysIterator.count(_._1 eq spark)
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     purgeStopped()
     readerCache.getOrElseUpdate((spark, sfDir, name),
       spark.read.parquet(s"$sfDir/$name.parquet"))
+  }
+
+  // SF dir -> a small id, so view names are unique per SF dir without
+  // embedding the path (temp view names are case-folded)
+  private val sfIds = new scala.collection.concurrent.TrieMap[String, Int]
+  private val nextSfId = new java.util.concurrent.atomic.AtomicInteger
+  private def viewName(sf: String, name: String): String =
+    s"__graft_sf${sfIds.getOrElseUpdate(sf, nextSfId.incrementAndGet())}_$name"
+
+  /** The name of a session temp view over `name`'s memoized reader, for
+    * SQL text: `s"SELECT … FROM ${Tables.sqlRef(s, sf, "lineitem")}"`.
+    * The view is registered once per (session, SF dir, table) by a plain
+    * catalog put of the reader's analyzed plan (no command execution);
+    * later references only look it up. The `__graft_sf<n>_` prefix keeps
+    * it apart from [[registerTables]]' plain names and from user views. */
+  def sqlRef(spark: SparkSession, sf: String, name: String): String = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import org.apache.spark.sql.catalyst.catalog._
+    val view = viewName(sf, name)
+    val catalog = spark.sessionState.catalog
+    if (catalog.getRawTempView(view).isEmpty) {
+      val plan = frame(spark, sf, name).queryExecution.analyzed
+      val meta = CatalogTable(TableIdentifier(view), CatalogTableType.VIEW,
+        CatalogStorageFormat.empty, plan.schema,
+        properties = Map(CatalogTable.VIEW_STORING_ANALYZED_PLAN -> "true"))
+      catalog.createTempView(view, TemporaryViewRelation(meta, Some(plan)),
+        overrideIfExists = true)
+    }
+    view
   }
 
   def region(spark: SparkSession, sf: String): DataFrame   = read(spark, sf, "region")
@@ -86,6 +126,11 @@ object Tables {
     }
     unified.withColumn("ts", col("ts").cast("timestamp"))
   }
+
+  /** A table by name; events goes through its normalizing reader, never
+    * the raw file. */
+  private def frame(spark: SparkSession, sf: String, name: String): DataFrame =
+    if (name == "events") events(spark, sf) else read(spark, sf, name)
 
   // ---- scan-spread mitigation for unsplittable inputs -------------------
   // A parquet scan parallelizes at ROW-GROUP granularity: byte-range splits
@@ -151,19 +196,19 @@ object Tables {
 
   private[graft] def spread(spark: SparkSession, sf: String, name: String,
       key: org.apache.spark.sql.Column): DataFrame = {
-    // events goes through its normalizing reader, never the raw file
-    val df = if (name == "events") events(spark, sf) else read(spark, sf, name)
+    val df = frame(spark, sf, name)
     if (shouldSpread(spark, sf, name)) df.repartition(key) else df
   }
 
-  /** The SQL-text twin of [[spread]]: a `/*+ REPARTITION(key) */` hint
-    * string when the layout gate says the table cannot feed the session's
-    * cores, empty otherwise. Lets the text-SQL surface stay pure SQL while
-    * keeping the mitigation layout-adaptive (a production-scale table gets
-    * no hint and keeps map-side partial aggregation). */
+  /** The SQL-text twin of [[spread]]: the table's [[sqlRef]] view, wrapped
+    * in a `/*+ REPARTITION(key) */` subquery when the layout gate says the
+    * table cannot feed the session's cores, bare otherwise. Lets the
+    * text-SQL surface stay pure SQL while keeping the mitigation
+    * layout-adaptive (a production-scale table gets no hint and keeps
+    * map-side partial aggregation). */
   private[graft] def spreadFrom(spark: SparkSession, sf: String, name: String,
       key: String): String = {
-    val ref = s"parquet.`$sf/$name.parquet`"
+    val ref = sqlRef(spark, sf, name)
     // predicate pushdown still reaches the scan: Catalyst pushes filters
     // through RepartitionByExpression (PushedFilters plan-checked)
     if (shouldSpread(spark, sf, name)) s"(SELECT /*+ REPARTITION($key) */ * FROM $ref)"
@@ -176,8 +221,6 @@ object Tables {
   /** Register every table as a temp view so users get the full
     * `spark.sql(...)` surface over the same data the DataFrame API sees
     * (events included, with its timestamp normalization applied). */
-  def registerTables(spark: SparkSession, sf: String): Unit = names.foreach {
-    case "events" => events(spark, sf).createOrReplaceTempView("events")
-    case n => read(spark, sf, n).createOrReplaceTempView(n)
-  }
+  def registerTables(spark: SparkSession, sf: String): Unit =
+    names.foreach(n => frame(spark, sf, n).createOrReplaceTempView(n))
 }

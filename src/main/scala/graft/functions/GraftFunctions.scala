@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.DoubleType
 
 /** SQL registration for graft's native Catalyst expressions, so `spark.sql`
   * users get the same codegen'd kernels as the Column API
@@ -62,8 +63,10 @@ object GraftFunctions {
     (FunctionIdentifier("graft_kll_quantile"),
       info("graft_kll_quantile", classOf[KllQuantile],
         "graft_kll_quantile(x, rank) - mergeable DataSketches KLL quantile aggregate (rank must be a literal in [0,1])"),
+      // through a cast: a `0.5` literal parses as a DECIMAL, which is no
+      // java.lang.Number
       (es: Seq[Expression]) => KllQuantile(es(0),
-        es(1).eval().asInstanceOf[Number].doubleValue())),
+        Cast(es(1), DoubleType).eval().asInstanceOf[Double])),
     (FunctionIdentifier("graft_shingle_hashes"),
       info("graft_shingle_hashes", classOf[ShingleHashes],
         "graft_shingle_hashes(s, w) - array of every width-w character-shingle rollhash of a string, one linear pass (w must be a literal >= 1)"),

@@ -759,18 +759,21 @@ object Relational {
   }
 
   /** TPC-H Q3 shape through the TEXT SQL surface end-to-end: parser →
-    * analyzer → optimizer on `spark.sql(...)` with direct
-    * `parquet.`…`` table references (no temp views, no DataFrame API) —
+    * analyzer → optimizer on `spark.sql(...)`, no DataFrame API —
     * certifies that a SQL-only user of the library gets the same plans:
     * broadcast customer filter, shuffled orders⨝lineitem, decimal-exact
-    * revenue, TakeOrderedAndProject top-10. */
+    * revenue, TakeOrderedAndProject top-10. Tables are named through
+    * [[graft.Tables.sqlRef]], session temp views over the memoized
+    * `Tables` readers: the SQL surface shares the DataFrame surface's
+    * schema and file-listing snapshot (so building the query runs no
+    * schema-inference job), and `Tables.evict` refreshes both. */
   def qSqlQ3(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT l_orderkey, ${sumAsDouble(revDec)} AS revenue,
          |       o_orderdate, o_orderpriority
-         |FROM parquet.`$sf/customer.parquet` c
-         |JOIN parquet.`$sf/orders.parquet` o ON c.c_custkey = o.o_custkey
-         |JOIN parquet.`$sf/lineitem.parquet` l ON l.l_orderkey = o.o_orderkey
+         |FROM ${Tables.sqlRef(s, sf, "customer")} c
+         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON c.c_custkey = o.o_custkey
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l.l_orderkey = o.o_orderkey
          |WHERE c.c_mktsegment = 'BUILDING'
          |  AND o.o_orderdate < timestamp'1998-07-01'
          |  AND l.l_shipdate > timestamp'1998-07-01'
@@ -789,7 +792,7 @@ object Relational {
     s.sql(
       s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
          |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty
-         |FROM parquet.`$sf/customer.parquet` c
+         |FROM ${Tables.sqlRef(s, sf, "customer")} c
          |JOIN ${Tables.spreadFrom(s, sf, "orders", "o_orderkey")} o ON c_custkey = o_custkey
          |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l ON o_orderkey = l_orderkey
          |WHERE o_orderkey IN (
@@ -810,10 +813,10 @@ object Relational {
     s.sql(
       s"""SELECT c_custkey, c_name, ${Det.sumAsDouble(Det.revDec)} AS revenue,
          |       c_acctbal, n_name
-         |FROM parquet.`$sf/customer.parquet` c
-         |JOIN parquet.`$sf/orders.parquet` o ON c_custkey = o_custkey
-         |JOIN parquet.`$sf/lineitem.parquet` l ON l_orderkey = o_orderkey
-         |JOIN parquet.`$sf/nation.parquet` n ON c_nationkey = n_nationkey
+         |FROM ${Tables.sqlRef(s, sf, "customer")} c
+         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON c_custkey = o_custkey
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l_orderkey = o_orderkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON c_nationkey = n_nationkey
          |WHERE o_orderdate >= timestamp'1997-01-01'
          |  AND o_orderdate < timestamp'1997-04-01'
          |  AND l_returnflag = 'R'
@@ -832,8 +835,8 @@ object Relational {
          |         THEN ${Det.revDec} ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
          |       ${Det.sumAsDouble(Det.revDec)} AS DOUBLE) AS promo_share,
          |       count(*) AS n_lines
-         |FROM parquet.`$sf/lineitem.parquet` l
-         |JOIN parquet.`$sf/part.parquet` p ON l_partkey = p_partkey
+         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
+         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON l_partkey = p_partkey
          |WHERE l_shipdate >= timestamp'1998-01-01'
          |  AND l_shipdate < timestamp'1998-04-01'""".stripMargin)
 
@@ -848,10 +851,10 @@ object Relational {
   def qSqlQ4(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT o_orderpriority, count(*) AS order_count
-         |FROM parquet.`$sf/orders.parquet` o
+         |FROM ${Tables.sqlRef(s, sf, "orders")} o
          |WHERE o_orderdate >= timestamp'1997-01-01'
          |  AND o_orderdate < timestamp'1997-07-01'
-         |  AND EXISTS (SELECT 1 FROM parquet.`$sf/lineitem.parquet` l
+         |  AND EXISTS (SELECT 1 FROM ${Tables.sqlRef(s, sf, "lineitem")} l
          |              WHERE l.l_orderkey = o.o_orderkey
          |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
@@ -868,8 +871,8 @@ object Relational {
   def qSqlQ19(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT ${sumAsDouble(revDec)} AS revenue, count(*) AS n_lines
-         |FROM parquet.`$sf/lineitem.parquet` l
-         |JOIN parquet.`$sf/part.parquet` p ON p_partkey = l_partkey
+         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
+         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
          |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
          |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 30 AND l_quantity BETWEEN 10 AND 35)
          |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 50 AND l_quantity BETWEEN 25 AND 50)""".stripMargin)
@@ -886,12 +889,12 @@ object Relational {
     s.sql(
       s"""WITH revenue AS (
          |  SELECT l_suppkey AS supplier_no, sum($revDec) AS total_rev
-         |  FROM parquet.`$sf/lineitem.parquet`
+         |  FROM ${Tables.sqlRef(s, sf, "lineitem")}
          |  WHERE l_shipdate >= timestamp'1997-01-01'
          |    AND l_shipdate < timestamp'1997-04-01'
          |  GROUP BY l_suppkey)
          |SELECT s_suppkey, s_name, ${liftDec4("total_rev")} AS total_rev
-         |FROM parquet.`$sf/supplier.parquet`
+         |FROM ${Tables.sqlRef(s, sf, "supplier")}
          |JOIN revenue ON s_suppkey = supplier_no
          |WHERE total_rev = (SELECT max(total_rev) FROM revenue)
          |ORDER BY s_suppkey""".stripMargin)
@@ -910,14 +913,14 @@ object Relational {
     s.sql(
       s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
          |       count(*) AS n_lines
-         |FROM parquet.`$sf/lineitem.parquet` l
-         |JOIN parquet.`$sf/part.parquet` p ON p_partkey = l_partkey
+         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
+         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
          |WHERE p_size <= 10 AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
          |  AND CAST(l_quantity AS DECIMAL(12,2)) * 5 *
-         |      (SELECT count(*) FROM parquet.`$sf/lineitem.parquet` l2
+         |      (SELECT count(*) FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
          |       WHERE l2.l_partkey = p.p_partkey)
          |    < (SELECT sum(CAST(l_quantity AS DECIMAL(12,2)))
-         |       FROM parquet.`$sf/lineitem.parquet` l2
+         |       FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
          |       WHERE l2.l_partkey = p.p_partkey)""".stripMargin)
 
   /** TPC-H Q22 shape (global sales opportunity) — the ANTI-JOIN +
@@ -932,14 +935,14 @@ object Relational {
     s.sql(
       s"""WITH pool AS (
          |  SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)) AS bal
-         |  FROM parquet.`$sf/customer.parquet`
+         |  FROM ${Tables.sqlRef(s, sf, "customer")}
          |  WHERE c_nationkey IN (1, 3, 7, 12, 17, 20, 24))
          |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
          |       ${liftDec2("sum(bal)")} AS totacctbal
          |FROM pool c
          |WHERE bal * (SELECT count(*) FROM pool WHERE bal > 0.00)
          |      > (SELECT sum(bal) FROM pool WHERE bal > 0.00)
-         |  AND NOT EXISTS (SELECT 1 FROM parquet.`$sf/orders.parquet` o
+         |  AND NOT EXISTS (SELECT 1 FROM ${Tables.sqlRef(s, sf, "orders")} o
          |                  WHERE o.o_custkey = c.c_custkey
          |                    AND o.o_orderpriority = '1-URGENT')
          |GROUP BY c_nationkey ORDER BY cntrycode""".stripMargin)
@@ -954,13 +957,13 @@ object Relational {
   def qSqlQ5(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT n_name, ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM parquet.`$sf/customer.parquet`
+         |FROM ${Tables.sqlRef(s, sf, "customer")}
          |JOIN ${Tables.spreadFrom(s, sf, "orders", "o_orderkey")}   ON c_custkey = o_custkey
          |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} ON l_orderkey = o_orderkey
-         |JOIN parquet.`$sf/supplier.parquet` ON l_suppkey = s_suppkey
+         |JOIN ${Tables.sqlRef(s, sf, "supplier")} ON l_suppkey = s_suppkey
          |                                    AND c_nationkey = s_nationkey
-         |JOIN parquet.`$sf/nation.parquet`   ON s_nationkey = n_nationkey
-         |JOIN parquet.`$sf/region.parquet`   ON n_regionkey = r_regionkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")}   ON s_nationkey = n_nationkey
+         |JOIN ${Tables.sqlRef(s, sf, "region")}   ON n_regionkey = r_regionkey
          |WHERE r_name = 'ASIA'
          |  AND o_orderdate >= timestamp'1996-01-01'
          |  AND o_orderdate < timestamp'1997-01-01'
@@ -980,12 +983,12 @@ object Relational {
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          |       CAST(year(l_shipdate) AS INT) AS l_year,
          |       ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM parquet.`$sf/supplier.parquet`
-         |JOIN parquet.`$sf/lineitem.parquet` ON s_suppkey = l_suppkey
-         |JOIN parquet.`$sf/orders.parquet`   ON o_orderkey = l_orderkey
-         |JOIN parquet.`$sf/customer.parquet` ON c_custkey = o_custkey
-         |JOIN parquet.`$sf/nation.parquet` n1 ON s_nationkey = n1.n_nationkey
-         |JOIN parquet.`$sf/nation.parquet` n2 ON c_nationkey = n2.n_nationkey
+         |FROM ${Tables.sqlRef(s, sf, "supplier")}
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON s_suppkey = l_suppkey
+         |JOIN ${Tables.sqlRef(s, sf, "orders")}   ON o_orderkey = l_orderkey
+         |JOIN ${Tables.sqlRef(s, sf, "customer")} ON c_custkey = o_custkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")} n1 ON s_nationkey = n1.n_nationkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")} n2 ON c_nationkey = n2.n_nationkey
          |WHERE n1.n_nationkey < 12 AND n2.n_nationkey < 12
          |  AND n1.n_nationkey <> n2.n_nationkey
          |GROUP BY 1, 2, 3
@@ -1017,10 +1020,10 @@ object Relational {
   def qSqlQ21(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT s_name, count(*) AS numwait
-         |FROM parquet.`$sf/supplier.parquet` s
+         |FROM ${Tables.sqlRef(s, sf, "supplier")} s
          |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l1 ON s_suppkey = l1.l_suppkey
-         |JOIN parquet.`$sf/orders.parquet` o ON o_orderkey = l1.l_orderkey
-         |JOIN parquet.`$sf/nation.parquet` n ON s_nationkey = n_nationkey
+         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON o_orderkey = l1.l_orderkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON s_nationkey = n_nationkey
          |WHERE o.o_orderstatus = 'F'
          |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
          |  AND n_nationkey < 13
@@ -1047,8 +1050,8 @@ object Relational {
     s.sql(
       s"""SELECT c_count, count(*) AS custdist
          |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-         |      FROM parquet.`$sf/customer.parquet` c
-         |      LEFT OUTER JOIN parquet.`$sf/orders.parquet` o
+         |      FROM ${Tables.sqlRef(s, sf, "customer")} c
+         |      LEFT OUTER JOIN ${Tables.sqlRef(s, sf, "orders")} o
          |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
          |      GROUP BY c_custkey) c_orders
          |GROUP BY c_count
@@ -1068,13 +1071,13 @@ object Relational {
     s.sql(
       s"""SELECT p_brand, p_type, p_size,
          |       count(DISTINCT l_suppkey) AS supplier_cnt
-         |FROM parquet.`$sf/lineitem.parquet` l
-         |JOIN parquet.`$sf/part.parquet` p ON p_partkey = l_partkey
+         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
+         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
          |WHERE p_brand <> 'Brand#1'
          |  AND p_type NOT LIKE 'PROMO%'
          |  AND p_size IN (1, 4, 9, 16, 25, 36, 49, 50)
          |  AND l_suppkey NOT IN (SELECT s_suppkey
-         |                        FROM parquet.`$sf/supplier.parquet`
+         |                        FROM ${Tables.sqlRef(s, sf, "supplier")}
          |                        WHERE s_acctbal < 600)
          |GROUP BY p_brand, p_type, p_size
          |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
@@ -1094,11 +1097,11 @@ object Relational {
   def qSqlQ20(s: SparkSession, sf: String): DataFrame =
     s.sql(
       s"""SELECT s_suppkey, s_name, s_acctbal
-         |FROM parquet.`$sf/supplier.parquet`
+         |FROM ${Tables.sqlRef(s, sf, "supplier")}
          |WHERE s_suppkey IN (
          |  SELECT l_suppkey FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_suppkey")}
          |  WHERE l_partkey IN (SELECT p_partkey
-         |                      FROM parquet.`$sf/part.parquet`
+         |                      FROM ${Tables.sqlRef(s, sf, "part")}
          |                      WHERE p_name LIKE 'small%')
          |    AND l_shipdate >= timestamp'1997-01-01'
          |    AND l_shipdate < timestamp'1998-01-01'
@@ -1127,14 +1130,14 @@ object Relational {
          |FROM (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
          |             ${Det.revDec} AS vol,
          |             n2.n_name AS supp_nation
-         |      FROM parquet.`$sf/part.parquet`
-         |      JOIN parquet.`$sf/lineitem.parquet` ON p_partkey = l_partkey
-         |      JOIN parquet.`$sf/supplier.parquet` ON s_suppkey = l_suppkey
-         |      JOIN parquet.`$sf/orders.parquet`   ON l_orderkey = o_orderkey
-         |      JOIN parquet.`$sf/customer.parquet` ON o_custkey = c_custkey
-         |      JOIN parquet.`$sf/nation.parquet` n1 ON c_nationkey = n1.n_nationkey
-         |      JOIN parquet.`$sf/region.parquet`   ON n1.n_regionkey = r_regionkey
-         |      JOIN parquet.`$sf/nation.parquet` n2 ON s_nationkey = n2.n_nationkey
+         |      FROM ${Tables.sqlRef(s, sf, "part")}
+         |      JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON p_partkey = l_partkey
+         |      JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = l_suppkey
+         |      JOIN ${Tables.sqlRef(s, sf, "orders")}   ON l_orderkey = o_orderkey
+         |      JOIN ${Tables.sqlRef(s, sf, "customer")} ON o_custkey = c_custkey
+         |      JOIN ${Tables.sqlRef(s, sf, "nation")} n1 ON c_nationkey = n1.n_nationkey
+         |      JOIN ${Tables.sqlRef(s, sf, "region")}   ON n1.n_regionkey = r_regionkey
+         |      JOIN ${Tables.sqlRef(s, sf, "nation")} n2 ON s_nationkey = n2.n_nationkey
          |      WHERE r_name = 'ASIA' AND p_type = 'PROMO'
          |        AND o_orderdate BETWEEN timestamp'1996-01-01'
          |                            AND timestamp'1997-12-31') t
@@ -1155,14 +1158,14 @@ object Relational {
     s.sql(
       s"""SELECT DISTINCT p_partkey, s_suppkey, s_name, n_name,
          |       CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE) AS best_price
-         |FROM parquet.`$sf/part.parquet` p
-         |JOIN parquet.`$sf/lineitem.parquet` l ON l_partkey = p_partkey
-         |JOIN parquet.`$sf/supplier.parquet` s ON s_suppkey = l_suppkey
-         |JOIN parquet.`$sf/nation.parquet` n ON s_nationkey = n_nationkey
+         |FROM ${Tables.sqlRef(s, sf, "part")} p
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l_partkey = p_partkey
+         |JOIN ${Tables.sqlRef(s, sf, "supplier")} s ON s_suppkey = l_suppkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON s_nationkey = n_nationkey
          |WHERE p_size <= 5
          |  AND CAST(l_extendedprice AS DECIMAL(12,2)) = (
          |    SELECT min(CAST(l2.l_extendedprice AS DECIMAL(12,2)))
-         |    FROM parquet.`$sf/lineitem.parquet` l2
+         |    FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
          |    WHERE l2.l_partkey = p.p_partkey)
          |ORDER BY p_partkey, s_suppkey
          |LIMIT 100""".stripMargin)
@@ -1180,7 +1183,7 @@ object Relational {
       s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
          |                CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
          |       count(*) AS n_lines
-         |FROM parquet.`$sf/lineitem.parquet`
+         |FROM ${Tables.sqlRef(s, sf, "lineitem")}
          |WHERE l_shipdate >= timestamp'1997-01-01'
          |  AND l_shipdate < timestamp'1998-01-01'
          |  AND l_discount BETWEEN 0.02 AND 0.06
@@ -1203,11 +1206,11 @@ object Relational {
          |              * CAST(l_quantity AS DECIMAL(12,2))
          |              * CAST(0.60 AS DECIMAL(4,2))) AS DOUBLE) AS profit,
          |       count(*) AS n_lines
-         |FROM parquet.`$sf/part.parquet`
-         |JOIN parquet.`$sf/lineitem.parquet` ON p_partkey = l_partkey
-         |JOIN parquet.`$sf/supplier.parquet` ON s_suppkey = l_suppkey
-         |JOIN parquet.`$sf/orders.parquet`   ON o_orderkey = l_orderkey
-         |JOIN parquet.`$sf/nation.parquet`   ON s_nationkey = n_nationkey
+         |FROM ${Tables.sqlRef(s, sf, "part")}
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON p_partkey = l_partkey
+         |JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = l_suppkey
+         |JOIN ${Tables.sqlRef(s, sf, "orders")}   ON o_orderkey = l_orderkey
+         |JOIN ${Tables.sqlRef(s, sf, "nation")}   ON s_nationkey = n_nationkey
          |WHERE p_name LIKE '%gear%'
          |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)
 
@@ -1226,8 +1229,8 @@ object Relational {
          |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
          |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
          |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-         |FROM parquet.`$sf/orders.parquet` o
-         |JOIN parquet.`$sf/lineitem.parquet` l ON o_orderkey = l_orderkey
+         |FROM ${Tables.sqlRef(s, sf, "orders")} o
+         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON o_orderkey = l_orderkey
          |WHERE l_shipdate >= timestamp'1997-01-01'
          |  AND l_shipdate < timestamp'1998-01-01'
          |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
@@ -1255,12 +1258,12 @@ object Relational {
     * DECIMAL before t·10⁴ could reach 2⁶³. */
   def qSqlQ11(s: SparkSession, sf: String): DataFrame =
     s.sql(
-      s"""WITH sc AS (SELECT count(*) AS s FROM parquet.`$sf/supplier.parquet`),
+      s"""WITH sc AS (SELECT count(*) AS s FROM ${Tables.sqlRef(s, sf, "supplier")}),
          |i4 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL SELECT 3),
          |ps AS (
          |  SELECT DISTINCT p_partkey AS ps_partkey,
          |         (p_partkey + i4.i * (sc.s div 4 + p_partkey div sc.s)) % sc.s AS ps_suppkey
-         |  FROM parquet.`$sf/part.parquet` CROSS JOIN i4 CROSS JOIN sc),
+         |  FROM ${Tables.sqlRef(s, sf, "part")} CROSS JOIN i4 CROSS JOIN sc),
          |ps2 AS (
          |  SELECT ps_partkey, ps_suppkey,
          |         (ps_partkey * 47 + ps_suppkey * 31) % 9999 + 1 AS ps_availqty,
@@ -1269,8 +1272,8 @@ object Relational {
          |filtered AS (
          |  SELECT ps_partkey, CAST(sum(ps_cost_cents * ps_availqty) AS BIGINT) AS v_cents
          |  FROM ps2
-         |  JOIN parquet.`$sf/supplier.parquet` ON s_suppkey = ps_suppkey
-         |  JOIN parquet.`$sf/nation.parquet` ON n_nationkey = s_nationkey
+         |  JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = ps_suppkey
+         |  JOIN ${Tables.sqlRef(s, sf, "nation")} ON n_nationkey = s_nationkey
          |  WHERE n_name = 'NATION_15'
          |  GROUP BY ps_partkey),
          |tot AS (SELECT CAST(sum(v_cents) AS BIGINT) AS t FROM filtered)

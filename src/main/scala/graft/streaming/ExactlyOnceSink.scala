@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Exactly-once file sink for Structured Streaming (SURVEY.md §4.3).
   *
@@ -114,9 +114,10 @@ object ExactlyOnceSink {
       // that dies AFTER its rename nested into the committed dir but
       // BEFORE its fs.delete(nested) leaves batch=N/_staging_batch=N-UUID
       // — a full duplicate copy that the top-level glob above never sees.
-      // Readers are already safe (the '_' prefix hides it from Spark/Hive
-      // listings), but sweep it too so the committed dir converges to
-      // exactly one physical copy on the next attempt/replay.
+      // Spark lists a `_` name that contains `=` as data, so only `read`
+      // (which takes the batch dir's own files) is safe from it; sweep it
+      // so the committed dir converges to exactly one physical copy on
+      // the next attempt/replay.
       val nested =
         fs.globStatus(new Path(committed, s"_staging_batch=$batchId-*"))
       if (nested != null) nested.foreach(st => fs.delete(st.getPath, true))
@@ -166,6 +167,19 @@ object ExactlyOnceSink {
     if (fs.exists(committed)) sweepStagings()
     placed
   }
+
+  /** The committed output of a [[parquetSink]]: the parquet files of
+    * every `outDir/batch=N` dir, with `batch` as a partition column. Only
+    * a published batch has that dir, so stagings and a commit whose
+    * publish has not landed stay invisible. Reading `outDir` itself fails:
+    * Spark keeps `_`-prefixed names that contain `=`, such as the
+    * `_COMMITTED_batch=N` markers, as data. For the same reason the glob
+    * stops at the batch dir's own files: a losing recoverer's copy nested
+    * in it (`batch=N/_staging_batch=N-…`, swept on the next attempt)
+    * would otherwise read as a second partition level. Needs at least one
+    * published batch (an empty glob has no schema). */
+  def read(spark: SparkSession, outDir: String): DataFrame =
+    spark.read.option("basePath", outDir).parquet(s"$outDir/batch=*/*.parquet")
 
   /** foreachBatch handler writing each micro-batch to outDir/batch=N. */
   def parquetSink(outDir: String): (DataFrame, Long) => Unit = (df, batchId) => {

@@ -20,6 +20,15 @@ class SqlSurfaceSpec extends SparkSuite {
     assert(Tables.names.forall(t => spark.sql(s"SELECT * FROM $t LIMIT 1").count() == 1))
   }
 
+  test("graft_kll_quantile takes a decimal rank literal like a double one") {
+    graft.functions.GraftFunctions.register(spark)
+    val r = spark.sql(
+      """SELECT graft_kll_quantile(CAST(id AS DOUBLE), 0.5) AS dec,
+        |       graft_kll_quantile(CAST(id AS DOUBLE), 0.5D) AS dbl
+        |FROM range(1000)""".stripMargin).head()
+    assert(!r.isNullAt(0) && r.getDouble(0) == r.getDouble(1))
+  }
+
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("sliding windows stream equals batch twin on same data") {

@@ -232,4 +232,20 @@ class StreamingSpec extends SparkSuite {
     val got = spark.read.parquet(s"$outDir/batch=0")
     assert(got.count() == 5)
   }
+
+  test("exactly-once sink: read sees exactly the published batches") {
+    val outDir = Files.createTempDirectory("eo_read").toString
+    val sink = ExactlyOnceSink.parquetSink(outDir)
+    sink(spark.range(3).toDF("value"), 0L)
+    sink(spark.range(10, 12).toDF("value"), 1L)
+    // debris the protocol can leave behind: a commit whose publish never
+    // landed (marker, no batch=2), a crashed attempt's staging, and a
+    // losing recoverer's copy nested in a published batch
+    Files.createFile(java.nio.file.Paths.get(outDir, "_COMMITTED_batch=2"))
+    spark.range(100, 105).toDF("value").write.parquet(s"$outDir/_staging_batch=3-x")
+    spark.range(10, 12).toDF("value").write.parquet(s"$outDir/batch=1/_staging_batch=1-x")
+    val got = ExactlyOnceSink.read(spark, outDir)
+      .collect().map(r => (r.getAs[Int]("batch"), r.getAs[Long]("value"))).sorted.toSeq
+    assert(got == Seq((0, 0L), (0, 1L), (0, 2L), (1, 10L), (1, 11L)))
+  }
 }

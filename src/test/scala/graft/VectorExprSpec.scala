@@ -139,4 +139,25 @@ class VectorExprSpec extends SparkSuite {
       .select(graft.functions.TextExpressions.rollHash(col("t2"))).collect()
     assert(nulls.count(_.isNullAt(0)) == 3, "null input must propagate")
   }
+
+  test("minhash: ids outside [0, P) take the legacy-% branch; congruent ids agree across branches") {
+    // The kernel folds ids in [0, P) with Mersenne shifts and keeps Java %
+    // for the rest (negative residues included). Pin both against the
+    // plain % formula, on the driver-side kernel and the codegen'd SQL one.
+    import graft.functions.MinHash.{MersennePrime => P, hashA, hashB, signature}
+    def reference(ids: Seq[Long]): Seq[Long] = hashA.indices.map(j =>
+      ids.map(s => ((s % P) * hashA(j) + hashB(j)) % P).min)
+    def kernel(ids: Seq[Long]): Seq[Long] = signature(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(ids.toArray[Any])).toSeq
+    val legacy = Seq(P, P + 5, 1L << 40, Long.MaxValue, -1L, -12345L)
+    assert(kernel(legacy) == reference(legacy))
+    val below = 12345L
+    assert(kernel(Seq(below)) == reference(Seq(below)), "the hot path must equal the % formula")
+    assert(kernel(Seq(below + P)) == kernel(Seq(below)),
+      "an id and its +P twin must hash alike on the two branches")
+    graft.functions.GraftFunctions.register(spark)
+    val viaSql = Seq(Tuple1(legacy), Tuple1(Seq(below)), Tuple1(Seq(below + P))).toDF("ids")
+      .select(expr("graft_minhash_sig(ids)")).collect().map(_.getSeq[Long](0)).toSeq
+    assert(viaSql == Seq(reference(legacy), reference(Seq(below)), reference(Seq(below))))
+  }
 }
