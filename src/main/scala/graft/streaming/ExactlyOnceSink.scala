@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.UUID
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -57,19 +58,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exclusion of live drivers still belongs to fencing tokens / the
   * checkpoint lock, not the filesystem. In-JVM duplicate attempts
   * (speculative tasks, a second query on the same checkpoint) never even
-  * reach the race: they serialize on a per-(outDir, batch) lock. For object stores or a real Kafka sink, swap
-  * the commit step for a transactional producer with transactional.id =
-  * (checkpointDir, batchId) — same protocol, not locally testable (no
-  * Kafka connector jar, SURVEY.md §0).
+  * reach the race: they serialize on a lock stripe of (outDir, batch).
+  * For object stores or a real Kafka sink, swap the commit step for a
+  * transactional producer with transactional.id = (checkpointDir,
+  * batchId) — same protocol, not locally testable (no Kafka connector
+  * jar, SURVEY.md §0).
+  *
+  * Local I/O: the staging write goes through [[NioLocalFileSystem]]
+  * (see [[parquetSink]]), the stream's checkpoint through [[NioLocalFs]]
+  * when the stream comes from [[Sources.fileStream]]. Both are Hadoop's
+  * local filesystem without its `chmod`/`readlink` process forks; the
+  * protocol, the `.crc` sidecars and the file layout are unchanged.
   */
 object ExactlyOnceSink {
 
-  // One lock per (outDir, batch): same-JVM duplicate attempts serialize so
-  // at most one is in the write→commit→publish window. Entries are one
-  // tiny Object per batch ever committed by this JVM — bounded by the
-  // stream's lifetime, cleared with the process.
-  private val commitLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  // Lock stripes over (outDir, batch): same-JVM duplicate attempts of one
+  // batch share a stripe, so at most one is in the write→commit→publish
+  // window. Unrelated batches that share a stripe only queue behind it.
+  private val commitLocks = Array.fill(64)(new Object)
 
   /** Atomically create `p` with `content`, failing if it already exists.
     * Local filesystems get true O_EXCL through NIO (Hadoop's local
@@ -181,30 +187,31 @@ object ExactlyOnceSink {
   def read(spark: SparkSession, outDir: String): DataFrame =
     spark.read.option("basePath", outDir).parquet(s"$outDir/batch=*/*.parquet")
 
-  /** foreachBatch handler writing each micro-batch to outDir/batch=N. */
+  // Hadoop conf entries that bind `file:` to NioLocalFileSystem, uncached
+  private val nioLocal = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** foreachBatch handler writing each micro-batch to outDir/batch=N.
+    *
+    * A local sink runs on [[NioLocalFileSystem]]: the staging write gets
+    * `fs.file.impl` (with that scheme's FileSystem cache off) as writer
+    * options, and the marker, rename and sweeps use a filesystem resolved
+    * from the same entries. So the parquet files, `.crc` sidecars and
+    * committer dirs are created without the `chmod` forks of Hadoop's
+    * local filesystem. Writer options, not a session conf: the JVM-wide
+    * FileSystem cache already holds the stock `file:` instance, and only
+    * an uncached instance picks up the binding. Other schemes are
+    * unaffected. */
   def parquetSink(outDir: String): (DataFrame, Long) => Unit = (df, batchId) => {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val out = new Path(outDir)
+    val conf = new Configuration(df.sparkSession.sparkContext.hadoopConfiguration)
+    nioLocal.foreach { case (k, v) => conf.set(k, v) }
     val fs = out.getFileSystem(conf)
-    val lock = commitLocks.computeIfAbsent(s"$outDir#$batchId", _ => new Object)
+    val lock = commitLocks(Math.floorMod((outDir, batchId).hashCode, commitLocks.length))
     lock.synchronized {
-      val alreadyDone =
-        fs.exists(new Path(out, s"_COMMITTED_batch=$batchId")) &&
-          fs.exists(new Path(out, s"batch=$batchId"))
-      if (!alreadyDone)
-        commitAttempt(fs, out, batchId)(staging =>
-          df.write.mode("overwrite").parquet(staging.toString))
-      else {
-        val stale = fs.globStatus(new Path(out, s"_staging_batch=$batchId-*"))
-        if (stale != null) stale.foreach(st => fs.delete(st.getPath, true))
-        // same nested-leftover sweep as commitAttempt's sweepStagings: a
-        // replay that finds the batch already committed is exactly the
-        // "next attempt" that must converge a crashed loser's nested copy
-        val nested = fs.globStatus(
-          new Path(out, s"batch=$batchId/_staging_batch=$batchId-*"))
-        if (nested != null) nested.foreach(st => fs.delete(st.getPath, true))
-      }
+      commitAttempt(fs, out, batchId)(staging =>
+        df.write.mode("overwrite").options(nioLocal).parquet(staging.toString))
     }
   }
 }

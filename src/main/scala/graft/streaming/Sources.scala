@@ -25,9 +25,21 @@ import org.apache.spark.sql.types.StructType
 object Sources {
 
   /** File-based stream: each new parquet file in `dir` becomes micro-batch
-    * input. Exactly-once with the file-sink manifest or ExactlyOnceSink. */
-  def fileStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    * input. Exactly-once with the file-sink manifest or ExactlyOnceSink.
+    *
+    * Binds FileContext's `file:` scheme to [[NioLocalFs]] on the session
+    * (unless the session already binds it). Spark copies session confs
+    * into every Hadoop conf a query builds, so a local checkpoint — the
+    * offsets and commits logs at start, each batch's state store — then
+    * writes its files, `.crc` sidecars and renames without the `chmod` and
+    * `readlink` forks of Hadoop's local filesystem (dozens per micro-batch
+    * when the Hadoop native library is not loaded). Same file layout, same
+    * rename semantics. */
+  def fileStream(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
+    val key = "fs.AbstractFileSystem.file.impl"
+    if (spark.conf.getOption(key).isEmpty) spark.conf.set(key, classOf[NioLocalFs].getName)
     spark.readStream.schema(schema).parquet(dir)
+  }
 
   /** Kafka stream -> (key, value) strings. PRODUCTION ONLY (no local
     * connector jar): value parsing mirrors the reference's
