@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits, on stdout:
   *   1. one JSON line with the full per-query map (the detailed record),
@@ -30,23 +29,13 @@ object Bench {
     df.write.mode("overwrite").format("noop").save()
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus
     // AQE knob for A/B runs: at bench SFs every query is sub-second and the
     // static 32-partition plan already matches cores, so AQE's per-stage
     // re-plan jobs are measurable fixed overhead; at real scale AQE earns
     // its keep (skew splits, partition coalescing — exercised in ScaleSpec)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // UTC like Verify and the test suite: the events reader's NTZ->LTZ
-      // normalization is value-identical only under UTC, and timed queries
-      // must compute the same values the correctness gate checks
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, Session.envAqe)
+    val parallelism = spark.sparkContext.defaultParallelism
 
     // machine-noise context: the one-shot totals of identical code swing
     // 41-56 s across runs (PERF.md) purely with background load, so the
@@ -145,7 +134,7 @@ object Bench {
       s"\"" + k + "\":" + (if (okAll) v else -1.0)
     }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$warmTotal,"unit":"sec","queries":${qjson(warm)},"cold_value":$coldTotal,"cold_queries":${qjson(cold)},"steady_value":$steadyTotal,"steady_queries":$steadyJson,"passes_run":${passes.size},"pass_totals":$passTotals,"pass_loadavg":$passLoads,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"failed":${failedNames.size},"errors":$errs,"materialization":"noop-sink (full rows+columns; pre-r12 rounds timed .count(), which let Catalyst prune output work - totals are not comparable across that change)","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$warmTotal,"unit":"sec","queries":${qjson(warm)},"cold_value":$coldTotal,"cold_queries":${qjson(cold)},"steady_value":$steadyTotal,"steady_queries":$steadyJson,"passes_run":${passes.size},"pass_totals":$passTotals,"pass_loadavg":$passLoads,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"failed":${failedNames.size},"errors":$errs,"cpus":$cpus,"default_parallelism":$parallelism,"materialization":"noop-sink (full rows+columns; pre-r12 rounds timed .count(), which let Catalyst prune output work - totals are not comparable across that change)","sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_LOCAL.json")
       try w.println(fullJson) finally w.close()
@@ -164,7 +153,7 @@ object Bench {
     }.mkString("{", ",", "}")
     println(s"""{"metric":"queries_cs","unit":"centisec","basis":"min-of-${passes.size}-passes","queries":$centis}""")
     // compact total LAST: short enough to survive any output-tail capture
-    println(s"""{"metric":"total","value":$warmTotal,"unit":"sec","cold_value":$coldTotal,"steady_value":$steadyTotal,"passes_run":${passes.size},"pass_totals":$passTotals,"pass_loadavg":$passLoads,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"failed":${failedNames.size},"materialization":"noop","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$warmTotal,"unit":"sec","cold_value":$coldTotal,"steady_value":$steadyTotal,"passes_run":${passes.size},"pass_totals":$passTotals,"pass_loadavg":$passLoads,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"failed":${failedNames.size},"cpus":$cpus,"default_parallelism":$parallelism,"materialization":"noop","sf":"$sfDir"}""")
     spark.stop()
     if (failedNames.nonEmpty) sys.exit(1)
   }

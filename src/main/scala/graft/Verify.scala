@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,10 @@ object Verify {
     // Optional 3rd arg: comma-separated query names — local iteration only
     // (the driver always calls with exactly two args → full sweep).
     val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Determinism probe knob (local only; the driver never sets it):
-      // SPARK_GRAFT_AQE=false re-runs the whole oracle board without
-      // adaptive execution, proving no result depends on AQE re-planning.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_AQE=false (a local determinism probe) re-runs the whole
+    // oracle board without adaptive execution, proving no result depends
+    // on AQE re-planning
+    val spark = Session.local(Session.envCpus, Session.envAqe)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

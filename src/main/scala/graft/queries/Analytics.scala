@@ -129,7 +129,8 @@ object Analytics {
     * LOCF window over the joined frame — runs THREE output-sized passes
     * (the join's sort, the window, the final sort) over a frame the gaps
     * inflate far beyond the data (105M spine rows from ~20M observations
-    * at 100×; measured 19.3 s, tools/LocfAb). Here the fill INVERTS:
+    * at 100×; measured 19.3 s, PERF.md "Round 15: q_resample_locf
+    * certified and cut 19.3 → 6.75 s at 100×"). Here the fill INVERTS:
     * lead(hr) over the OBSERVATIONS (data-sized window) gives each
     * observation its successor, and one explode emits the observation's
     * carried range [hr, next−1h] directly — every filled row is born

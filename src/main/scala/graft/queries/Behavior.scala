@@ -978,7 +978,7 @@ object Behavior {
     * there the PassJoin name-segment RE-BLOCKING above takes over: the
     * floor-bound bins exceed the cap, re-block on (segment idx, segment
     * text), and recall stays floored instead of collapsing (measured at
-    * 1000×: ScaleSpec deep leg + ErProbe four-decade row in PERF.md).
+    * 1000×: ScaleSpec deep leg + the four-decade pair-mass row in PERF.md).
     *
     * Scale: pair fanout is Σ|block|² ≈ #blocks·(cap/2)² with #blocks ∝ n
     * — LINEAR pair mass per corpus row (measured flat across
@@ -989,11 +989,11 @@ object Behavior {
 
   /** The final blocked frame (seg, bin, pass, sidx, sstr, k) the
     * candidate self-join runs on — factored out of [[erCandidates]] so
-    * tools.ErProbe can measure the raw pair mass Σ C(|block|,2) from
-    * block SIZES alone (one groupBy, no join): at 1000× the self-join's
-    * ~1G raw pairs out-spill a single box's /tmp even under a count,
-    * while the size-derived mass is exact and corpus-cheap. ONE
-    * definition — the probe can never drift from the query's blocking. */
+    * the raw pair mass Σ C(|block|,2) can be measured from block SIZES
+    * alone (one groupBy, no join): at 1000× the self-join's ~1G raw
+    * pairs out-spill a single box's /tmp even under a count, while the
+    * size-derived mass is exact and corpus-cheap (PERF.md, "Round 17: ER
+    * pair mass measured at the FIFTH decade"). */
   /** Normalized (k, n, seg, cents) frame shared by the blocking and the
     * scoring re-attach. */
   private def erCust(customer: DataFrame): DataFrame =

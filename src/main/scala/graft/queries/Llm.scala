@@ -117,8 +117,8 @@ object Llm {
     nearDupPairs(Tables.documents(s, sf))
 
   /** (band_idx, band_hash) rows per doc from a cached signature frame —
-    * shared by the pipeline and the `tools.NearDbg` bucket-distribution
-    * probe. */
+    * the pipeline's banding step; the bucket-cap and band-layout findings
+    * are in PERF.md, "Round 15: q_dedup_near band-layout frontier". */
   private[graft] def bandsOfSig(sig: DataFrame, nBands: Int = Bands): DataFrame = {
     // public-API guard (nearDupPairs threads nBands through here): a band
     // count that doesn't divide NumHashes would silently drop the trailing
@@ -154,7 +154,8 @@ object Llm {
   /** Signature frame (doc_id, m0..m31) from a raw shingle frame — the
     * 32-way min-aggregate REFERENCE shape; the pipeline itself rides the
     * fused per-row kernel ([[sigOf]]), and LlmSpec locks the two
-    * bit-identical. Kept for tools.NearStage's stage-split probe. */
+    * bit-identical. The stage split it measured is in PERF.md, "Round 17:
+    * q_dedup_near converted to a full-replay oracle". */
   private[graft] def sigFromShingles(shRaw: DataFrame): DataFrame = {
     val hashed = shRaw.withColumn("h", pmod(col("sh"), lit(MersennePrime)))
     val minhashAggs = (0 until NumHashes).map { i =>
@@ -170,7 +171,8 @@ object Llm {
     * buffer table was the dominant near-dup stage at every decade. No
     * repartition needed: map work parallelizes with the scan, and a doc
     * with no 5-gram (length < 5) has NO signature row, exactly like the
-    * groupBy route. Exposed for tools.NearDbg/MassProbe. */
+    * groupBy route. Its candidate-mass measurements are in PERF.md,
+    * "Round 17: q_dedup_near converted to a full-replay oracle". */
   private[graft] def sigOf(docs: DataFrame): DataFrame = {
     import graft.functions.TextExpressions.{minHashSig, shingleHashes}
     docs.filter(length(col("text")) >= 5)
@@ -180,8 +182,8 @@ object Llm {
         (0 until NumHashes).map(i => col("ms").getItem(i).as(s"m$i")): _*)
   }
 
-  /** Raw repartitioned shingle frame — exposed for tools.NearStage's
-    * stage-split probe so it times the pipeline's exact stage shapes. */
+  /** Raw repartitioned shingle frame — the input of [[sigFromShingles]],
+    * the reference shape LlmSpec locks the fused signature against. */
   private[graft] def sigShingles(docs: DataFrame): DataFrame =
     shingles(docs.repartition(col("doc_id")))
 
@@ -254,7 +256,8 @@ object Llm {
     // is < 2³¹ (mod a 31-bit Mersenne prime), so (m₂ⱼ | m₂ⱼ₊₁ << 32) is
     // lossless in 16 columns — half the shuffled bytes, identical
     // per-hash agreement arithmetic recovered by shift/mask (all codegen;
-    // 100× sieve stage ~18.5 → ~10 s, tools.NearStage).
+    // 100× sieve stage ~18.5 → ~10 s, PERF.md "Round 17: q_dedup_near
+    // converted to a full-replay oracle").
     val packs = NumHashes / 2
     def packed(idCol: String, p: String) =
       sig.select(col("doc_id").as(idCol) +:

@@ -1334,9 +1334,10 @@ object TextOps {
 
   /** Stop-window purge threshold: an anchored window shared by more docs
     * than this is boilerplate and leaves the posting index before the
-    * self-join. ONE definition, read by the query, its oracle string, and
-    * tools.CapProbe — so tuning the cap can never silently leave the probe
-    * measuring a different cut than the query applies. */
+    * self-join. ONE definition, read by the query and its oracle string,
+    * so the two can never apply different cuts. What the cap drops at
+    * sf0.1 and 100× is in PERF.md, "Round 15: what the two remaining
+    * fixed caps drop". */
   private[graft] val SubstringStopCap = 64
 
   def qDedupSubstring(s: SparkSession, sf: String): DataFrame = {

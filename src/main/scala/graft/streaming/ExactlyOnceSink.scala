@@ -183,9 +183,20 @@ object ExactlyOnceSink {
     * stops at the batch dir's own files: a losing recoverer's copy nested
     * in it (`batch=N/_staging_batch=N-…`, swept on the next attempt)
     * would otherwise read as a second partition level. Needs at least one
-    * published batch (an empty glob has no schema). */
-  def read(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.option("basePath", outDir).parquet(s"$outDir/batch=*/*.parquet")
+    * published batch (an empty glob has no schema).
+    *
+    * The glob is expanded here and the reader gets the matched files:
+    * handed the glob as its one path, Spark's `FileStreamSink.hasMetadata`
+    * stats it as a literal path and logs a WARN with a stack trace on
+    * every read. */
+  def read(spark: SparkSession, outDir: String): DataFrame = {
+    val glob = new Path(outDir, "batch=*/*.parquet")
+    val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = Option(fs.globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    // no published batch: the unmatched glob fails in Spark as before
+    spark.read.option("basePath", outDir)
+      .parquet((if (files.isEmpty) Seq(glob.toString) else files): _*)
+  }
 
   // Hadoop conf entries that bind `file:` to NioLocalFileSystem, uncached
   private val nioLocal = Map(

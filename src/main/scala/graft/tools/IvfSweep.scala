@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall/wall frontier sweep for q_sim_ivf's probe fan-out (round-17
   * verdict ask #4: lift random-corpus recall@5 via multi-probe). Per
   * nprobe: mean recall@5 vs the exact brute-force baseline (q_sim_topk,
@@ -16,12 +14,7 @@ object IvfSweep {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 2
     val nprobes = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(4, 8, 12, 16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.envCpus)
     val exact = graft.queries.Llm.qSimTopk(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
       .groupBy(_._1).map { case (p, g) => p -> g.map(_._2).toSet }

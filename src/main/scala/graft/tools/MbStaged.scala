@@ -48,7 +48,7 @@ object MbStaged {
       f.delete(); ()
     }
     rmrf(scratchF); scratchF.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Session.envCpus
     val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "128")
 
     val watcher = new Thread(() => {
@@ -59,16 +59,10 @@ object MbStaged {
     })
     watching = true; watcher.setDaemon(true); watcher.start()
 
-    def session(stage: String): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", s"$scratch/$stage")
-      .config("spark.ui.enabled", "false").getOrCreate()
-
     def staged[T](stage: String)(f: SparkSession => T): T = {
-      val s = session(stage)
-      s.sparkContext.setLogLevel("ERROR")
+      val s = graft.Session.local(cpus,
+        "spark.sql.shuffle.partitions" -> shuf,
+        "spark.local.dir" -> s"$scratch/$stage")
       peak = du(scratchF)
       val t0 = System.nanoTime()
       val r = f(s)

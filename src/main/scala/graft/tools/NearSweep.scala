@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Recall/wall frontier sweep for the near-dup pipeline's two bounding
   * knobs (round-13 verdict ask #3): BucketCap (oversized-LSH-bucket drop)
   * and the signature-estimate sieve threshold.
@@ -18,12 +16,7 @@ object NearSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/benchdata/sf1x")
     val reps = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(graft.Session.envCpus)
     val docs = graft.Tables.documents(spark, sfDir)
     // round-15 sweep axis: the band layout over the fixed 32-hash
     // signature — (4 bands × 8 rows) / (8 × 4, the default) / (16 × 2).

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Steady-state per-query timing: run each query N times, report min.
   * Materializes through the noop sink (never `.count()` — a count lets
   * Catalyst prune output-column work, see `graft.Bench`'s scaladoc). */
@@ -7,7 +6,7 @@ object Perf {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.Session.envCpus
     // shuffle partitions default to the core count (the bench shape), but
     // order-of-magnitude probes size them to the DATA so per-partition
     // bytes stay inside execution memory — the knob the 100 TB posture
@@ -15,12 +14,8 @@ object Perf {
     // executor memory at the target SF"); a 32-partition sort over a
     // 1000× corpus is ~600 MB/partition and measures the spill path, not
     // the operator
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
+    val spark = graft.Session.local(cpus, "spark.sql.shuffle.partitions" -> shuf)
     val names = if (args.length > 2) args.drop(2).toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     val rows = names.map { n =>
       val fn = graft.SparkEntry.queries(n)

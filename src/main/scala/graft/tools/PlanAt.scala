@@ -1,14 +1,14 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-/** Formatted plan for (query, sfDir) — Plans pinned sf0.01; this one takes
-  * the dir so scale-gate behavior (Tables.spread) can be plan-audited. */
+/** Formatted physical plan of each named query at an SF dir (plan audit;
+  * the dir matters because scale gates such as `Tables.spread` change the
+  * plan with the data size).
+  *
+  *   runMain graft.tools.PlanAt <sfDir> <query> [<query> ...]
+  */
 object PlanAt {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     args.drop(1).foreach { n =>
       println(s"===== $n =====")
       println(graft.SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

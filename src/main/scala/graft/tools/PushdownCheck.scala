@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Prints the PushedFilters and ReadSchema lines of every parquet scan in
   * the named queries — the direct check that a predicate reached the reader
   * and that the scan reads only the columns the query needs (both matter at
@@ -21,11 +20,7 @@ object PushdownCheck {
     Seq("q_sql_q3", "q_sql_q5", "q_sql_q7", "q_sql_q10", "q_sql_q14",
       "q_sql_q18", "q_filter_range")
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val gated = args.isEmpty
     val names = if (args.nonEmpty) args.toSeq else defaultMustPush

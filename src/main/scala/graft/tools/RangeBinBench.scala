@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B of [[graft.plans.RangeBinJoinRule]] on a synthetic range-join
@@ -12,10 +11,7 @@ object RangeBinBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val m = if (args.length > 1) args(1).toLong else 20000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
 
     // deterministic workload: points on a 10M-second line; hour intervals
     val pts = spark.range(n).select(col("id").as("event_id"),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives an order-of-magnitude-larger bench corpus from a driver SF dir
@@ -71,13 +71,7 @@ object ScaleUp {
       if (args.length > 3) { val ts = args(3).split(",").toSet; ts.contains }
       else _ => true
     }
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     def tbl(n: String): DataFrame = spark.read.parquet(s"$src/$n.parquet")
     def maxOf(df: DataFrame, c: String): Long =

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 /** Count exchange operators per query (scale-audit instrument). With AQE
@@ -8,12 +7,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
   * which the string dump prints, are not live operators). */
 object Shuffles {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(4, "spark.sql.adaptive.enabled" -> "false")
     args.foreach { n =>
       val plan = graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
         .queryExecution.executedPlan

@@ -69,8 +69,6 @@ class CachesSpec extends SparkSuite {
       }.filter(_._2 > 0).toMap
     val audited = Map(
       "Caches.scala" -> 1,          // the registered() implementation itself
-      "tools/NearDbg.scala" -> 5,   // interactive debug tool, not a query path
-      "tools/NearStage.scala" -> 5, // stage-split A/B probe (round-14 sieve work), not a query path
       "queries/TextOps.scala" -> 2, // BPE trainer loop: per-round cache + unpersist
       "queries/VectorOps.scala" -> 4) // index-memo builder + CC/pagerank loop frames
     assert(counts == audited,

@@ -75,22 +75,6 @@ class SourcesSpec extends SparkSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("Metrics.audit: DQ metrics ride the action's own pass and reconcile exactly") {
-    Metrics.withCollector(spark) { c =>
-      val audited = Metrics.audit(Tables.orders(spark, sf001), "orders_audit",
-        nullCols = Seq("o_custkey"), sumCols = Seq("o_totalprice"))
-      val n = audited.filter(col("o_totalprice") >= 0).count()
-      val m = c.await("orders_audit").getOrElse(fail("audit metrics never arrived"))
-      assert(m.getAs[Long]("rows") == n, "rows metric must equal the action's row count")
-      assert(m.getAs[Long]("nulls_o_custkey") == 0L, "fixture custkey carries no nulls")
-      // the control sum reconciles bit-for-bit with a standalone exact agg
-      val direct = Tables.orders(spark, sf001)
-        .agg(sum(col("o_totalprice").cast("decimal(28,2)")).cast("double")).head.getDouble(0)
-      assert(m.getAs[Double]("sum_o_totalprice") == direct,
-        "observed control sum must reconcile exactly with the standalone aggregate")
-    }
-  }
-
   test("json source round-trips with explicit schema") {
     val dir = Files.createTempDirectory("json_src").toString
     base.write.mode("overwrite").json(dir)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite; UTC + small shuffle fan-out to keep
-  * tests fast on tiny data. Registered per-query caches drain after every
+/** One shared local session per suite, built by [[Session]] at a fixed 4
+  * cores (not `SPARK_GRAFT_CPUS`, so the suite's session does not follow
+  * the box): UTC + small shuffle fan-out to keep tests fast on tiny data. Registered per-query caches drain after every
   * test — the suite JVM runs hundreds of queries on shared sessions and
   * must not accumulate their cache blocks (the Bench/Verify discipline). */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
@@ -15,16 +16,11 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
     super.afterEach()
   }
 
-  /** The shared builder, also used to RE-create an identical session after
+  /** The shared session, also used to RE-create an identical session after
     * a lifecycle test stops the context (suites run sequentially in the
     * forked JVM, so a later suite's getOrCreate picks the fresh one up). */
-  protected def newSharedSession(): SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-    .getOrCreate()
+  protected def newSharedSession(): SparkSession =
+    Session.local(4, "spark.sql.warehouse.dir" -> "/tmp/graft-warehouse")
 
   lazy val spark: SparkSession = newSharedSession()
 

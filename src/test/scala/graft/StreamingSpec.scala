@@ -248,4 +248,25 @@ class StreamingSpec extends SparkSuite {
       .collect().map(r => (r.getAs[Int]("batch"), r.getAs[Long]("value"))).sorted.toSeq
     assert(got == Seq((0, 0L), (0, 1L), (0, 2L), (1, 10L), (1, 11L)))
   }
+
+  test("exactly-once sink: read logs no FileStreamSink warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val outDir = Files.createTempDirectory("eo_read_log").toString
+    ExactlyOnceSink.parquetSink(outDir)(spark.range(3).toDF("value"), 0L)
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("eo-read-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("FileStreamSink") && e.getLevel.isMoreSpecificThan(Level.WARN))
+          warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try assert(ExactlyOnceSink.read(spark, outDir).count() == 3)
+    finally { root.removeAppender(capture); capture.stop() }
+    assert(warnings.isEmpty, s"FileStreamSink warned on read: ${warnings.peek()}")
+  }
 }
