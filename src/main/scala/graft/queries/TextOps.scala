@@ -1431,15 +1431,20 @@ object TextOps {
     * no pairs left. */
   /** The CTE chain re-deriving every BPE merge selection + rewrite from
     * the raw corpus down to `doctoks` (doc_id, wpos, tpos, tok) — shared
-    * by the q_bpe_encode oracle and the q_tokenizer_fertility oracle. */
+    * by the q_bpe_encode oracle and the q_tokenizer_fertility oracle.
+    * Each stage's CTEs are `AS MATERIALIZED` (DuckDB syntax): `st_k` reads
+    * `st_{k-1}` twice, once through `p_k`/`t_k` and once in its own
+    * rewrite, and a DuckDB that inlines a CTE at every reference expands
+    * the last stage to about 2^10 copies of the chain, more than 12 GiB.
+    * Materialised, each stage is computed once; the rows are the same. */
   private val bpeDoctoksCtes: String = {
     val stages = (1 to BpeMerges).map { k =>
-      s"""p$k AS (SELECT toks[i] AS l, toks[i+1] AS r, f
+      s"""p$k AS MATERIALIZED (SELECT toks[i] AS l, toks[i+1] AS r, f
          |  FROM (SELECT f, string_split(trim(tokstr), '  ') AS toks FROM st${k - 1}),
          |       UNNEST(range(1, len(toks))) AS u(i)),
-         |t$k AS (SELECT l, r, CAST(sum(f) AS BIGINT) AS n FROM p$k GROUP BY l, r
+         |t$k AS MATERIALIZED (SELECT l, r, CAST(sum(f) AS BIGINT) AS n FROM p$k GROUP BY l, r
          |        ORDER BY sum(f) DESC, l ASC, r ASC LIMIT 1),
-         |st$k AS (SELECT s.w, s.f,
+         |st$k AS MATERIALIZED (SELECT s.w, s.f,
          |  coalesce(replace(s.tokstr, ' ' || t.l || '  ' || t.r || ' ',
          |                   ' ' || t.l || t.r || ' '), s.tokstr) AS tokstr
          |  FROM st${k - 1} s LEFT JOIN t$k t ON TRUE)""".stripMargin

@@ -1,10 +1,19 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+import graft.streaming.{ExactlyOnceSink, Sources}
 
 /** Batch source formats beyond parquet: CSV, JSON, ORC, and XML
-  * round-trips. */
+  * round-trips; and how a local file stream lists its micro-batches. */
 class SourcesSpec extends SparkSuite {
 
   private lazy val base = Tables.events(spark, sf001)
@@ -126,5 +135,88 @@ class SourcesSpec extends SparkSuite {
     assert(back.count() == base.count())
     assert(back.agg(sum("event_id")).head.getLong(0) ==
       base.agg(sum("event_id")).head.getLong(0))
+  }
+
+  /** Drains a fresh checkpoint over `src` through `Sources.fileStream` →
+    * `tumblingCounts` → `parquetSink`; returns the sink's output dir and
+    * the description of every job the drain started. */
+  private def drain(session: SparkSession, src: String): (String, Seq[String]) = {
+    val dir = Files.createTempDirectory("listing_drain")
+    val (cp, out) = (s"$dir/cp", s"$dir/out")
+    val sc = session.sparkContext
+    val descriptions = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descriptions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val q = Pipeline.tumblingCounts(
+          Sources.fileStream(session, src, listingEvents.schema).withWatermark("ts", "10 minutes"))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", cp)
+        .foreachBatch(ExactlyOnceSink.parquetSink(out))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      // the listener bus delivers in order: once this job's start is seen,
+      // every job the drain started has been seen too
+      val barrier = s"listing barrier ${System.nanoTime()}"
+      sc.setJobDescription(barrier)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 20000
+      while (!descriptions.contains(barrier) && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(descriptions.contains(barrier), "the listener never saw the barrier job")
+    } finally sc.removeSparkListener(listener)
+    (out, descriptions.asScala.toSeq)
+  }
+
+  private lazy val listingEvents = Tables.events(spark, sf001)
+    .select("event_id", "ts", "user_id", "event_type", "value")
+
+  /** 48 parquet files of sf0.001's events in a fresh dir. */
+  private def listingSource(): String = {
+    val src = Files.createTempDirectory("listing_src").toString
+    listingEvents.repartition(48).write.mode("overwrite").parquet(src)
+    val files = new java.io.File(src).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(files >= 40, s"fixture must hold 40 or more files, has $files")
+    src
+  }
+
+  private def isListing(description: String) =
+    description.startsWith("Listing leaf files and directories")
+
+  test("a local file stream lists its 48-file batch on the driver, with the batch twin's counts") {
+    val src = listingSource()
+    val session = spark.newSession()
+    assert(!session.sessionState.conf.contains(Sources.ListingThreshold))
+    val (out, jobs) = drain(session, src)
+    assert(!jobs.exists(isListing), s"a listing job ran: ${jobs.filter(isListing)}")
+    assert(session.conf.get(Sources.ListingThreshold) == Int.MaxValue.toString)
+    val got = ExactlyOnceSink.read(session, out).drop("batch")
+    val want = Pipeline.tumblingCounts(session.read.schema(listingEvents.schema).parquet(src))
+    assert(got.count() == want.count() && want.count() > 0)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+  }
+
+  test("a session that set the listing threshold keeps it, and Spark's listing job with it") {
+    val src = listingSource()
+    val session = spark.newSession()
+    session.conf.set(Sources.ListingThreshold, 32L)
+    val (_, jobs) = drain(session, src)
+    assert(session.conf.get(Sources.ListingThreshold) == "32")
+    assert(jobs.exists(isListing), s"no listing job among: $jobs")
+  }
+
+  test("only a `file:` directory counts as local; a bare path takes the default filesystem's scheme") {
+    val local = new URI("file:///")
+    val hdfs = new URI("hdfs://namenode:8020")
+    assert(Sources.isLocal("/tmp/events", local))
+    assert(Sources.isLocal("file:/tmp/events", hdfs))
+    assert(Sources.isLocal("FILE:///tmp/events", hdfs))
+    assert(!Sources.isLocal("/data/events", hdfs))
+    assert(!Sources.isLocal("hdfs://namenode:8020/data/events", local))
+    assert(!Sources.isLocal("s3a://bucket/events", local))
+    assert(!Sources.isLocal("gs://bucket/events", local))
   }
 }
