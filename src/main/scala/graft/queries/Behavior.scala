@@ -464,10 +464,10 @@ object Behavior {
     // is unknown until materialized, so every consumer would insert its own
     // user_id re-shuffle above the cache scan. Registering with AQE scoped
     // off preserves hashpartitioning(user_id) on the cached frame — all
-    // five consumers then reuse the ONE corpus shuffle (locked in
-    // PlanSpec). distinct comes AFTER the repartition for the same reason:
-    // grouping on (user_id, w) is satisfied by the user_id partitioning,
-    // so the cached lineage itself holds a single exchange.
+    // five consumers then reuse the ONE corpus shuffle (`repart=1` on its
+    // plan census line). distinct comes AFTER the repartition for the same
+    // reason: grouping on (user_id, w) is satisfied by the user_id
+    // partitioning, so the cached lineage itself holds a single exchange.
     val uw = SessionConfs.withConf(s, "spark.sql.adaptive.enabled" -> "false") {
       Caches.registered(Tables.events(s, sf)
         // floor() explicitly: a bare int cast of the division truncates in

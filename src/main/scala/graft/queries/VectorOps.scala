@@ -904,7 +904,7 @@ object VectorOps {
     * at every fixture SF — where Spark uses the unbounded min_by). The
     * assignment fan-out is a crossJoin against the `broadcast()`
     * centroid table — the one sanctioned BroadcastNestedLoopJoin shape
-    * (bounded build side), locked as exactly-one-BNLJ in PlanSpec; the
+    * (bounded build side), pinned as `bnlj=1` on its plan census line; the
     * pair stage itself stays a cluster-keyed equi-join.
     *
     * The cosine threshold (0.35, non-vacuous at every fixture SF — the
@@ -1166,8 +1166,8 @@ object VectorOps {
     * real corpora orders of magnitude under it). Per iteration: one tiny
     * (K×dims) centroid aggregate exchange; the lane frame is
     * pre-partitioned on vec_id and its shuffle is planner-REUSED across
-    * every round's consumers (exchange reuse — verified with
-    * tools.Shuffles: 5 rounds plan 2 corpus exchanges, not 10), so the
+    * every round's consumers (exchange reuse — its plan census line reads
+    * `repart=2`: 5 rounds plan 2 corpus exchanges, not 10), so the
     * E-step broadcast-join, the per-vector argmin, and the next round's
     * centroid join all ride the same distribution. Five rounds chain
     * LAZILY into one plan — at this depth Catalyst planning is cheap and
@@ -1177,7 +1177,7 @@ object VectorOps {
   def qKmeans(s: SparkSession, sf: String): DataFrame = {
     // deliberately UNCACHED: the loop below is lazy, so all 10 per-round
     // consumers share the lane frame through planner exchange reuse (2
-    // corpus exchanges for 5 rounds, verified with tools.Shuffles); an
+    // corpus exchanges for 5 rounds, `repart=2` on its census line); an
     // InMemoryRelation here would hide the vec_id partitioning under AQE
     // (the q_churn_matrix trap) and hand every consumer its own re-shuffle
     // — measured 1.9x slower than the reused exchange
