@@ -19,13 +19,10 @@ object Tables {
   // memoized frame is an immutable logical plan (relations are re-resolved
   // per derived query, so cross-query reuse cannot alias attributes any
   // more than the in-query self-joins already do). Keyed by session so
-  // test suites with their own sessions never share. A long-lived JVM
-  // cycling through sessions must not pin every dead session's frames
-  // (each DataFrame strongly references its session, so weak keys alone
-  // cannot collect them): entries whose context is stopped are purged on
-  // the next read — in OSS Spark `SparkSession.stop()` stops the context,
-  // so `isStopped` IS the end-of-session signal — and `evict` gives
-  // callers an explicit per-session hook.
+  // test suites with their own sessions never share; the [[SessionMemo]]
+  // purges a stopped session's frames on the next read and builds each
+  // reader exactly once under a race, and `evict` gives callers an
+  // explicit per-session hook.
   //
   // The text-SQL surface shares this memo: [[sqlRef]] names a session temp
   // view over the memoized reader, so a SQL query and a DataFrame query
@@ -34,33 +31,30 @@ object Tables {
   // added under an SF dir stay invisible to both surfaces until `evict`,
   // which drops the views together with the readers (a stopped session's
   // views die with its catalog, which the purge releases).
-  private val readerCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-  private def purgeStopped(): Unit =
-    readerCache.keysIterator.filter(_._1.sparkContext.isStopped).toList
-      .foreach(readerCache.remove)
-  /** Drop every memoized reader of `spark`, and the [[sqlRef]] views over
-    * them — for explicit lifecycle management and to refresh the file
-    * listings; stopped sessions are purged automatically on later reads. */
-  def evict(spark: SparkSession): Unit =
-    readerCache.keysIterator.filter(_._1 eq spark).toList.foreach { k =>
-      readerCache.remove(k)
-      spark.sessionState.catalog.dropTempView(viewName(k._2, k._3))
-    }
-  private[graft] def cachedReadersFor(spark: SparkSession): Int =
-    readerCache.keysIterator.count(_._1 eq spark)
+  private val readers = new SessionMemo[DataFrame]
+  /** Drop every memoized reader of `spark`, the [[sqlRef]] views over
+    * them and the scan-spread gate's table sizes — for explicit lifecycle
+    * management and to refresh the file listings; stopped sessions are
+    * purged automatically on later reads. */
+  def evict(spark: SparkSession): Unit = {
+    readers.evict(spark)
+    val catalog = spark.sessionState.catalog
+    catalog.getTempViewNames().filter(_.startsWith(viewPrefix)).foreach(catalog.dropTempView)
+    sizeCache.clear()
+  }
+  private[graft] def cachedReadersFor(spark: SparkSession): Int = readers.entriesFor(spark)
   private def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    purgeStopped()
-    readerCache.getOrElseUpdate((spark, sfDir, name),
-      spark.read.parquet(s"$sfDir/$name.parquet"))
+    val path = s"$sfDir/$name.parquet"
+    readers.getOrElseUpdate(spark, path)(spark.read.parquet(path))
   }
 
   // SF dir -> a small id, so view names are unique per SF dir without
   // embedding the path (temp view names are case-folded)
   private val sfIds = new scala.collection.concurrent.TrieMap[String, Int]
   private val nextSfId = new java.util.concurrent.atomic.AtomicInteger
+  private val viewPrefix = "__graft_sf"
   private def viewName(sf: String, name: String): String =
-    s"__graft_sf${sfIds.getOrElseUpdate(sf, nextSfId.incrementAndGet())}_$name"
+    s"$viewPrefix${sfIds.getOrElseUpdate(sf, nextSfId.incrementAndGet())}_$name"
 
   /** The name of a session temp view over `name`'s memoized reader, for
     * SQL text: `s"SELECT … FROM ${Tables.sqlRef(s, sf, "lineitem")}"`.
@@ -82,6 +76,28 @@ object Tables {
         overrideIfExists = true)
     }
     view
+  }
+
+  /** How a text-SQL query names its tables, so one SQL text renders for
+    * both engines: `t(name)` is a plain reference, `t.spread(name, key)`
+    * one that rides the scan-spread gate. */
+  trait SqlNames {
+    def apply(name: String): String
+    def spread(name: String, key: String): String
+  }
+
+  /** Spark's rendering: [[sqlRef]] views and the [[spreadFrom]] gate. */
+  def sqlNames(spark: SparkSession, sf: String): SqlNames = new SqlNames {
+    def apply(name: String): String = sqlRef(spark, sf, name)
+    def spread(name: String, key: String): String = spreadFrom(spark, sf, name, key)
+  }
+
+  /** The DuckDB oracle's rendering: bare table names. A spread renders as
+    * the bare name, so the Spark-only `REPARTITION` hint never reaches the
+    * oracle. */
+  val bareNames: SqlNames = new SqlNames {
+    def apply(name: String): String = name
+    def spread(name: String, key: String): String = name
   }
 
   def region(spark: SparkSession, sf: String): DataFrame   = read(spark, sf, "region")
@@ -168,6 +184,8 @@ object Tables {
   //     exchange is pure added work). The bound is maxPartitionBytes/8
   //     (16 MB at defaults): above every measured win (2.7–10.8 MB),
   //     below both measured inversions (16.7, 77 MB).
+  // The sizes are per (SF dir, table) across sessions; `evict` forgets
+  // them all, so the gate re-stats a table after files land under it.
   private val sizeCache =
     new scala.collection.concurrent.TrieMap[(String, String), Long]
   private def tableBytes(spark: SparkSession, sf: String, name: String): Long =

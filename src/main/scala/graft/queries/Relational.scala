@@ -762,24 +762,24 @@ object Relational {
     * analyzer → optimizer on `spark.sql(...)`, no DataFrame API —
     * certifies that a SQL-only user of the library gets the same plans:
     * broadcast customer filter, shuffled orders⨝lineitem, decimal-exact
-    * revenue, TakeOrderedAndProject top-10. Tables are named through
-    * [[graft.Tables.sqlRef]], session temp views over the memoized
-    * `Tables` readers: the SQL surface shares the DataFrame surface's
-    * schema and file-listing snapshot (so building the query runs no
-    * schema-inference job), and `Tables.evict` refreshes both. */
-  def qSqlQ3(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT l_orderkey, ${sumAsDouble(revDec)} AS revenue,
-         |       o_orderdate, o_orderpriority
-         |FROM ${Tables.sqlRef(s, sf, "customer")} c
-         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON c.c_custkey = o.o_custkey
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l.l_orderkey = o.o_orderkey
-         |WHERE c.c_mktsegment = 'BUILDING'
-         |  AND o.o_orderdate < timestamp'1998-07-01'
-         |  AND l.l_shipdate > timestamp'1998-07-01'
-         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         |ORDER BY revenue DESC, l_orderkey
-         |LIMIT 10""".stripMargin)
+    * revenue, TakeOrderedAndProject top-10. Tables are named through the
+    * renderer `t`: Spark's resolves them to [[graft.Tables.sqlRef]], session
+    * temp views over the memoized `Tables` readers, so the SQL surface
+    * shares the DataFrame surface's schema and file-listing snapshot
+    * (building the query runs no schema-inference job) and `Tables.evict`
+    * refreshes both; the oracle's writes the bare table names. */
+  def qSqlQ3(t: Tables.SqlNames): String =
+    s"""SELECT l_orderkey, ${sumAsDouble(revDec)} AS revenue,
+       |       o_orderdate, o_orderpriority
+       |FROM ${t("customer")} c
+       |JOIN ${t("orders")} o ON c.c_custkey = o.o_custkey
+       |JOIN ${t("lineitem")} l ON l.l_orderkey = o.o_orderkey
+       |WHERE c.c_mktsegment = 'BUILDING'
+       |  AND o.o_orderdate < timestamp'1998-07-01'
+       |  AND l.l_shipdate > timestamp'1998-07-01'
+       |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+       |ORDER BY revenue DESC, l_orderkey
+       |LIMIT 10""".stripMargin
 
   /** TPC-H Q18 shape (large-volume customers) through the text SQL
     * surface: the IN-subquery over a grouped HAVING is the part worth
@@ -788,20 +788,19 @@ object Relational {
     * orders⨝lineitem join shuffles on the order key both subquery and
     * outer side, and the top-100 is TakeOrderedAndProject. Quantity sums
     * are exact decimals surfaced as DOUBLE. */
-  def qSqlQ18(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-         |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty
-         |FROM ${Tables.sqlRef(s, sf, "customer")} c
-         |JOIN ${Tables.spreadFrom(s, sf, "orders", "o_orderkey")} o ON c_custkey = o_custkey
-         |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l ON o_orderkey = l_orderkey
-         |WHERE o_orderkey IN (
-         |  SELECT l_orderkey FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")}
-         |  GROUP BY l_orderkey
-         |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 250)
-         |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-         |ORDER BY o_totalprice DESC, o_orderkey
-         |LIMIT 100""".stripMargin)
+  def qSqlQ18(t: Tables.SqlNames): String =
+    s"""SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
+       |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty
+       |FROM ${t("customer")} c
+       |JOIN ${t.spread("orders", "o_orderkey")} o ON c_custkey = o_custkey
+       |JOIN ${t.spread("lineitem", "l_orderkey")} l ON o_orderkey = l_orderkey
+       |WHERE o_orderkey IN (
+       |  SELECT l_orderkey FROM ${t.spread("lineitem", "l_orderkey")}
+       |  GROUP BY l_orderkey
+       |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 250)
+       |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
+       |ORDER BY o_totalprice DESC, o_orderkey
+       |LIMIT 100""".stripMargin
 
   /** TPC-H Q10 shape (returned-item reporting) through the text SQL
     * surface: the four-way customer⨝orders⨝lineitem⨝nation join where
@@ -809,36 +808,34 @@ object Relational {
     * predicate prunes lineitem at the scan, nation broadcasts, and the
     * top-20 is TakeOrderedAndProject. Revenue is the shared exact
     * decimal fragment surfaced as DOUBLE. */
-  def qSqlQ10(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT c_custkey, c_name, ${Det.sumAsDouble(Det.revDec)} AS revenue,
-         |       c_acctbal, n_name
-         |FROM ${Tables.sqlRef(s, sf, "customer")} c
-         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON c_custkey = o_custkey
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l_orderkey = o_orderkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON c_nationkey = n_nationkey
-         |WHERE o_orderdate >= timestamp'1997-01-01'
-         |  AND o_orderdate < timestamp'1997-04-01'
-         |  AND l_returnflag = 'R'
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-         |ORDER BY revenue DESC, c_custkey
-         |LIMIT 20""".stripMargin)
+  def qSqlQ10(t: Tables.SqlNames): String =
+    s"""SELECT c_custkey, c_name, ${Det.sumAsDouble(Det.revDec)} AS revenue,
+       |       c_acctbal, n_name
+       |FROM ${t("customer")} c
+       |JOIN ${t("orders")} o ON c_custkey = o_custkey
+       |JOIN ${t("lineitem")} l ON l_orderkey = o_orderkey
+       |JOIN ${t("nation")} n ON c_nationkey = n_nationkey
+       |WHERE o_orderdate >= timestamp'1997-01-01'
+       |  AND o_orderdate < timestamp'1997-04-01'
+       |  AND l_returnflag = 'R'
+       |GROUP BY c_custkey, c_name, c_acctbal, n_name
+       |ORDER BY revenue DESC, c_custkey
+       |LIMIT 20""".stripMargin
 
   /** TPC-H Q14 shape (promotion effect) through the text SQL surface:
     * lineitem⨝part over a ship-quarter window with a conditional
     * revenue aggregate — promo share = 100·Σ(promo rev)/Σ(rev), both
     * sums exact decimals, the one division in double with operand text
     * shared verbatim with the oracle. */
-  def qSqlQ14(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT CAST(100.00 * CAST(sum(CASE WHEN p_type = 'PROMO'
-         |         THEN ${Det.revDec} ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
-         |       ${Det.sumAsDouble(Det.revDec)} AS DOUBLE) AS promo_share,
-         |       count(*) AS n_lines
-         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
-         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON l_partkey = p_partkey
-         |WHERE l_shipdate >= timestamp'1998-01-01'
-         |  AND l_shipdate < timestamp'1998-04-01'""".stripMargin)
+  def qSqlQ14(t: Tables.SqlNames): String =
+    s"""SELECT CAST(100.00 * CAST(sum(CASE WHEN p_type = 'PROMO'
+       |         THEN ${Det.revDec} ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
+       |       ${Det.sumAsDouble(Det.revDec)} AS DOUBLE) AS promo_share,
+       |       count(*) AS n_lines
+       |FROM ${t("lineitem")} l
+       |JOIN ${t("part")} p ON l_partkey = p_partkey
+       |WHERE l_shipdate >= timestamp'1998-01-01'
+       |  AND l_shipdate < timestamp'1998-04-01'""".stripMargin
 
   /** TPC-H Q4 shape (order-priority checking) through the text SQL
     * surface — the correlated-EXISTS exhibit: Catalyst must decorrelate
@@ -848,16 +845,15 @@ object Relational {
     * commit/receipt dates, so "late" = shipped more than 60 days after
     * the order date (same correlated-comparison structure as the
     * official l_commitdate < l_receiptdate). Integer counts only. */
-  def qSqlQ4(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT o_orderpriority, count(*) AS order_count
-         |FROM ${Tables.sqlRef(s, sf, "orders")} o
-         |WHERE o_orderdate >= timestamp'1997-01-01'
-         |  AND o_orderdate < timestamp'1997-07-01'
-         |  AND EXISTS (SELECT 1 FROM ${Tables.sqlRef(s, sf, "lineitem")} l
-         |              WHERE l.l_orderkey = o.o_orderkey
-         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
+  def qSqlQ4(t: Tables.SqlNames): String =
+    s"""SELECT o_orderpriority, count(*) AS order_count
+       |FROM ${t("orders")} o
+       |WHERE o_orderdate >= timestamp'1997-01-01'
+       |  AND o_orderdate < timestamp'1997-07-01'
+       |  AND EXISTS (SELECT 1 FROM ${t("lineitem")} l
+       |              WHERE l.l_orderkey = o.o_orderkey
+       |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
   /** TPC-H Q19 shape (discounted revenue over brand/size/quantity
     * bands) through the text SQL surface — the DISJUNCTIVE-predicate
@@ -868,14 +864,13 @@ object Relational {
     * l/p conjuncts evaluate post-join. Revenue is the exact decimal
     * fragment shared with every other revenue oracle; bands chosen
     * non-vacuous at every fixture SF. */
-  def qSqlQ19(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT ${sumAsDouble(revDec)} AS revenue, count(*) AS n_lines
-         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
-         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
-         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 30 AND l_quantity BETWEEN 10 AND 35)
-         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 50 AND l_quantity BETWEEN 25 AND 50)""".stripMargin)
+  def qSqlQ19(t: Tables.SqlNames): String =
+    s"""SELECT ${sumAsDouble(revDec)} AS revenue, count(*) AS n_lines
+       |FROM ${t("lineitem")} l
+       |JOIN ${t("part")} p ON p_partkey = l_partkey
+       |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
+       |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 30 AND l_quantity BETWEEN 10 AND 35)
+       |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 50 AND l_quantity BETWEEN 25 AND 50)""".stripMargin
 
   /** TPC-H Q15 shape (top supplier by quarterly revenue) — the
     * MAX-OF-AGGREGATE exhibit: the revenue CTE is aggregated once, then
@@ -885,19 +880,18 @@ object Relational {
     * broadcast into the filter, and the supplier dimension broadcasts.
     * The decimal sum keeps the max-equality exact — a float revenue
     * would make "equal to the max" order-dependent. */
-  def qSqlQ15(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""WITH revenue AS (
-         |  SELECT l_suppkey AS supplier_no, sum($revDec) AS total_rev
-         |  FROM ${Tables.sqlRef(s, sf, "lineitem")}
-         |  WHERE l_shipdate >= timestamp'1997-01-01'
-         |    AND l_shipdate < timestamp'1997-04-01'
-         |  GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name, ${liftDec4("total_rev")} AS total_rev
-         |FROM ${Tables.sqlRef(s, sf, "supplier")}
-         |JOIN revenue ON s_suppkey = supplier_no
-         |WHERE total_rev = (SELECT max(total_rev) FROM revenue)
-         |ORDER BY s_suppkey""".stripMargin)
+  def qSqlQ15(t: Tables.SqlNames): String =
+    s"""WITH revenue AS (
+       |  SELECT l_suppkey AS supplier_no, sum($revDec) AS total_rev
+       |  FROM ${t("lineitem")}
+       |  WHERE l_shipdate >= timestamp'1997-01-01'
+       |    AND l_shipdate < timestamp'1997-04-01'
+       |  GROUP BY l_suppkey)
+       |SELECT s_suppkey, s_name, ${liftDec4("total_rev")} AS total_rev
+       |FROM ${t("supplier")}
+       |JOIN revenue ON s_suppkey = supplier_no
+       |WHERE total_rev = (SELECT max(total_rev) FROM revenue)
+       |ORDER BY s_suppkey""".stripMargin
 
   /** TPC-H Q17 shape (small-quantity-order revenue) — the CORRELATED
     * SCALAR SUBQUERY DECORRELATION exhibit: the per-part quantity
@@ -909,19 +903,18 @@ object Relational {
     * (qty·5·count < sum, exact decimals/bigints) so the threshold is
     * order-independent — `0.2*avg(double)` would flip borderline rows
     * between engines. */
-  def qSqlQ17(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-         |       count(*) AS n_lines
-         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
-         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
-         |WHERE p_size <= 10 AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
-         |  AND CAST(l_quantity AS DECIMAL(12,2)) * 5 *
-         |      (SELECT count(*) FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
-         |       WHERE l2.l_partkey = p.p_partkey)
-         |    < (SELECT sum(CAST(l_quantity AS DECIMAL(12,2)))
-         |       FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
-         |       WHERE l2.l_partkey = p.p_partkey)""".stripMargin)
+  def qSqlQ17(t: Tables.SqlNames): String =
+    s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
+       |       count(*) AS n_lines
+       |FROM ${t("lineitem")} l
+       |JOIN ${t("part")} p ON p_partkey = l_partkey
+       |WHERE p_size <= 10 AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
+       |  AND CAST(l_quantity AS DECIMAL(12,2)) * 5 *
+       |      (SELECT count(*) FROM ${t("lineitem")} l2
+       |       WHERE l2.l_partkey = p.p_partkey)
+       |    < (SELECT sum(CAST(l_quantity AS DECIMAL(12,2)))
+       |       FROM ${t("lineitem")} l2
+       |       WHERE l2.l_partkey = p.p_partkey)""".stripMargin
 
   /** TPC-H Q22 shape (global sales opportunity) — the ANTI-JOIN +
     * UNCORRELATED THRESHOLD exhibit: rich customers (balance above the
@@ -931,21 +924,20 @@ object Relational {
     * a NOT EXISTS that must plan as a left-anti hash join on o_custkey.
     * The mean comparison is multiplied through (bal·count > sum, exact)
     * for order-independence, mirroring Q17. */
-  def qSqlQ22(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""WITH pool AS (
-         |  SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)) AS bal
-         |  FROM ${Tables.sqlRef(s, sf, "customer")}
-         |  WHERE c_nationkey IN (1, 3, 7, 12, 17, 20, 24))
-         |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-         |       ${liftDec2("sum(bal)")} AS totacctbal
-         |FROM pool c
-         |WHERE bal * (SELECT count(*) FROM pool WHERE bal > 0.00)
-         |      > (SELECT sum(bal) FROM pool WHERE bal > 0.00)
-         |  AND NOT EXISTS (SELECT 1 FROM ${Tables.sqlRef(s, sf, "orders")} o
-         |                  WHERE o.o_custkey = c.c_custkey
-         |                    AND o.o_orderpriority = '1-URGENT')
-         |GROUP BY c_nationkey ORDER BY cntrycode""".stripMargin)
+  def qSqlQ22(t: Tables.SqlNames): String =
+    s"""WITH pool AS (
+       |  SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)) AS bal
+       |  FROM ${t("customer")}
+       |  WHERE c_nationkey IN (1, 3, 7, 12, 17, 20, 24))
+       |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
+       |       ${liftDec2("sum(bal)")} AS totacctbal
+       |FROM pool c
+       |WHERE bal * (SELECT count(*) FROM pool WHERE bal > 0.00)
+       |      > (SELECT sum(bal) FROM pool WHERE bal > 0.00)
+       |  AND NOT EXISTS (SELECT 1 FROM ${t("orders")} o
+       |                  WHERE o.o_custkey = c.c_custkey
+       |                    AND o.o_orderpriority = '1-URGENT')
+       |GROUP BY c_nationkey ORDER BY cntrycode""".stripMargin
 
   /** TPC-H Q5 shape (local-supplier volume) through the text SQL surface —
     * the join-ORDER exhibit: six tables, where Catalyst must broadcast
@@ -954,21 +946,20 @@ object Relational {
     * co-location predicate (customer and supplier in the same nation)
     * rides the join, not a post-filter. Revenue is the exact decimal
     * fragment shared with every other revenue oracle. */
-  def qSqlQ5(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT n_name, ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM ${Tables.sqlRef(s, sf, "customer")}
-         |JOIN ${Tables.spreadFrom(s, sf, "orders", "o_orderkey")}   ON c_custkey = o_custkey
-         |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} ON l_orderkey = o_orderkey
-         |JOIN ${Tables.sqlRef(s, sf, "supplier")} ON l_suppkey = s_suppkey
-         |                                    AND c_nationkey = s_nationkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")}   ON s_nationkey = n_nationkey
-         |JOIN ${Tables.sqlRef(s, sf, "region")}   ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA'
-         |  AND o_orderdate >= timestamp'1996-01-01'
-         |  AND o_orderdate < timestamp'1997-01-01'
-         |GROUP BY n_name
-         |ORDER BY revenue DESC, n_name""".stripMargin)
+  def qSqlQ5(t: Tables.SqlNames): String =
+    s"""SELECT n_name, ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
+       |FROM ${t("customer")}
+       |JOIN ${t.spread("orders", "o_orderkey")}   ON c_custkey = o_custkey
+       |JOIN ${t.spread("lineitem", "l_orderkey")} ON l_orderkey = o_orderkey
+       |JOIN ${t("supplier")} ON l_suppkey = s_suppkey
+       |                                    AND c_nationkey = s_nationkey
+       |JOIN ${t("nation")}   ON s_nationkey = n_nationkey
+       |JOIN ${t("region")}   ON n_regionkey = r_regionkey
+       |WHERE r_name = 'ASIA'
+       |  AND o_orderdate >= timestamp'1996-01-01'
+       |  AND o_orderdate < timestamp'1997-01-01'
+       |GROUP BY n_name
+       |ORDER BY revenue DESC, n_name""".stripMargin
 
   /** TPC-H Q7 (volume shipping) through the SQL surface: bilateral
     * revenue between two nations per ship year, the nation table joined
@@ -978,21 +969,20 @@ object Relational {
     * orders⨝lineitem shuffle is the only big exchange; the trade-bloc
     * range filters (12 nations a side — wide enough that every SF keeps
     * bilateral rows) reach both dimension scans. */
-  def qSqlQ7(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |       CAST(year(l_shipdate) AS INT) AS l_year,
-         |       ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM ${Tables.sqlRef(s, sf, "supplier")}
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON s_suppkey = l_suppkey
-         |JOIN ${Tables.sqlRef(s, sf, "orders")}   ON o_orderkey = l_orderkey
-         |JOIN ${Tables.sqlRef(s, sf, "customer")} ON c_custkey = o_custkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")} n1 ON s_nationkey = n1.n_nationkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")} n2 ON c_nationkey = n2.n_nationkey
-         |WHERE n1.n_nationkey < 12 AND n2.n_nationkey < 12
-         |  AND n1.n_nationkey <> n2.n_nationkey
-         |GROUP BY 1, 2, 3
-         |ORDER BY 1, 2, 3""".stripMargin)
+  def qSqlQ7(t: Tables.SqlNames): String =
+    s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+       |       CAST(year(l_shipdate) AS INT) AS l_year,
+       |       ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
+       |FROM ${t("supplier")}
+       |JOIN ${t("lineitem")} ON s_suppkey = l_suppkey
+       |JOIN ${t("orders")}   ON o_orderkey = l_orderkey
+       |JOIN ${t("customer")} ON c_custkey = o_custkey
+       |JOIN ${t("nation")} n1 ON s_nationkey = n1.n_nationkey
+       |JOIN ${t("nation")} n2 ON c_nationkey = n2.n_nationkey
+       |WHERE n1.n_nationkey < 12 AND n2.n_nationkey < 12
+       |  AND n1.n_nationkey <> n2.n_nationkey
+       |GROUP BY 1, 2, 3
+       |ORDER BY 1, 2, 3""".stripMargin
 
   /** TPC-H Q21 shape (suppliers who kept orders waiting) through the
     * text SQL surface — the DOUBLE-CORRELATION exhibit: one correlated
@@ -1017,25 +1007,24 @@ object Relational {
     * ([[graft.Tables.spreadFrom]]) so the broadcast-probe chain leaves
     * the one-task scan at narrow layouts; bare refs at production
     * layouts. Counts are exact ints. */
-  def qSqlQ21(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT s_name, count(*) AS numwait
-         |FROM ${Tables.sqlRef(s, sf, "supplier")} s
-         |JOIN ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l1 ON s_suppkey = l1.l_suppkey
-         |JOIN ${Tables.sqlRef(s, sf, "orders")} o ON o_orderkey = l1.l_orderkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON s_nationkey = n_nationkey
-         |WHERE o.o_orderstatus = 'F'
-         |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-         |  AND n_nationkey < 13
-         |  AND EXISTS (SELECT 1 FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l2
-         |              WHERE l2.l_orderkey = l1.l_orderkey
-         |                AND l2.l_suppkey <> l1.l_suppkey)
-         |  AND NOT EXISTS (SELECT 1 FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")} l3
-         |                  WHERE l3.l_orderkey = l1.l_orderkey
-         |                    AND l3.l_suppkey <> l1.l_suppkey
-         |                    AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-         |GROUP BY s_name ORDER BY numwait DESC, s_name
-         |LIMIT 50""".stripMargin)
+  def qSqlQ21(t: Tables.SqlNames): String =
+    s"""SELECT s_name, count(*) AS numwait
+       |FROM ${t("supplier")} s
+       |JOIN ${t.spread("lineitem", "l_orderkey")} l1 ON s_suppkey = l1.l_suppkey
+       |JOIN ${t("orders")} o ON o_orderkey = l1.l_orderkey
+       |JOIN ${t("nation")} n ON s_nationkey = n_nationkey
+       |WHERE o.o_orderstatus = 'F'
+       |  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+       |  AND n_nationkey < 13
+       |  AND EXISTS (SELECT 1 FROM ${t.spread("lineitem", "l_orderkey")} l2
+       |              WHERE l2.l_orderkey = l1.l_orderkey
+       |                AND l2.l_suppkey <> l1.l_suppkey)
+       |  AND NOT EXISTS (SELECT 1 FROM ${t.spread("lineitem", "l_orderkey")} l3
+       |                  WHERE l3.l_orderkey = l1.l_orderkey
+       |                    AND l3.l_suppkey <> l1.l_suppkey
+       |                    AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+       |GROUP BY s_name ORDER BY numwait DESC, s_name
+       |LIMIT 50""".stripMargin
 
   /** TPC-H Q13 shape (customer order-count distribution) through the
     * text SQL surface — the OUTER-JOIN-UNDER-AGGREGATION exhibit: the
@@ -1046,16 +1035,15 @@ object Relational {
     * double aggregation is two partial+final pairs: per-customer counts
     * shuffle on c_custkey, the distribution on the ~20-value count
     * domain. All exact ints — nothing to float-drift. */
-  def qSqlQ13(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT c_count, count(*) AS custdist
-         |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-         |      FROM ${Tables.sqlRef(s, sf, "customer")} c
-         |      LEFT OUTER JOIN ${Tables.sqlRef(s, sf, "orders")} o
-         |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-         |      GROUP BY c_custkey) c_orders
-         |GROUP BY c_count
-         |ORDER BY custdist DESC, c_count DESC""".stripMargin)
+  def qSqlQ13(t: Tables.SqlNames): String =
+    s"""SELECT c_count, count(*) AS custdist
+       |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
+       |      FROM ${t("customer")} c
+       |      LEFT OUTER JOIN ${t("orders")} o
+       |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+       |      GROUP BY c_custkey) c_orders
+       |GROUP BY c_count
+       |ORDER BY custdist DESC, c_count DESC""".stripMargin
 
   /** TPC-H Q16 shape (supplier-relationship count) through the text SQL
     * surface — the NOT-IN + COUNT-DISTINCT exhibit: the supplier
@@ -1067,21 +1055,20 @@ object Relational {
     * partsupp as the part↔supplier relation; the balance threshold (600)
     * keeps the excluded set non-empty at every fixture SF. The brand/
     * type/size predicates are part-scan-pushable. */
-  def qSqlQ16(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT p_brand, p_type, p_size,
-         |       count(DISTINCT l_suppkey) AS supplier_cnt
-         |FROM ${Tables.sqlRef(s, sf, "lineitem")} l
-         |JOIN ${Tables.sqlRef(s, sf, "part")} p ON p_partkey = l_partkey
-         |WHERE p_brand <> 'Brand#1'
-         |  AND p_type NOT LIKE 'PROMO%'
-         |  AND p_size IN (1, 4, 9, 16, 25, 36, 49, 50)
-         |  AND l_suppkey NOT IN (SELECT s_suppkey
-         |                        FROM ${Tables.sqlRef(s, sf, "supplier")}
-         |                        WHERE s_acctbal < 600)
-         |GROUP BY p_brand, p_type, p_size
-         |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-         |LIMIT 40""".stripMargin)
+  def qSqlQ16(t: Tables.SqlNames): String =
+    s"""SELECT p_brand, p_type, p_size,
+       |       count(DISTINCT l_suppkey) AS supplier_cnt
+       |FROM ${t("lineitem")} l
+       |JOIN ${t("part")} p ON p_partkey = l_partkey
+       |WHERE p_brand <> 'Brand#1'
+       |  AND p_type NOT LIKE 'PROMO%'
+       |  AND p_size IN (1, 4, 9, 16, 25, 36, 49, 50)
+       |  AND l_suppkey NOT IN (SELECT s_suppkey
+       |                        FROM ${t("supplier")}
+       |                        WHERE s_acctbal < 600)
+       |GROUP BY p_brand, p_type, p_size
+       |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+       |LIMIT 40""".stripMargin
 
   /** TPC-H Q20 shape (potential part promotion) through the text SQL
     * surface — the NESTED-IN-CHAIN exhibit: an IN whose subquery itself
@@ -1094,20 +1081,19 @@ object Relational {
     * availability (no partsupp in the fixture); the supplier probe stays
     * a key-only semi join — no supplier attribute leaks into the
     * subquery. */
-  def qSqlQ20(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT s_suppkey, s_name, s_acctbal
-         |FROM ${Tables.sqlRef(s, sf, "supplier")}
-         |WHERE s_suppkey IN (
-         |  SELECT l_suppkey FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_suppkey")}
-         |  WHERE l_partkey IN (SELECT p_partkey
-         |                      FROM ${Tables.sqlRef(s, sf, "part")}
-         |                      WHERE p_name LIKE 'small%')
-         |    AND l_shipdate >= timestamp'1997-01-01'
-         |    AND l_shipdate < timestamp'1998-01-01'
-         |  GROUP BY l_suppkey, l_partkey
-         |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
-         |ORDER BY s_suppkey""".stripMargin)
+  def qSqlQ20(t: Tables.SqlNames): String =
+    s"""SELECT s_suppkey, s_name, s_acctbal
+       |FROM ${t("supplier")}
+       |WHERE s_suppkey IN (
+       |  SELECT l_suppkey FROM ${t.spread("lineitem", "l_suppkey")}
+       |  WHERE l_partkey IN (SELECT p_partkey
+       |                      FROM ${t("part")}
+       |                      WHERE p_name LIKE 'small%')
+       |    AND l_shipdate >= timestamp'1997-01-01'
+       |    AND l_shipdate < timestamp'1998-01-01'
+       |  GROUP BY l_suppkey, l_partkey
+       |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
+       |ORDER BY s_suppkey""".stripMargin
 
   /** TPC-H Q8 shape (national market share) through the text SQL
     * surface — the widest join-ORDER exhibit here (8 relations): part,
@@ -1120,28 +1106,27 @@ object Relational {
     * conditional aggregate over the exact decimal revenue fragment —
     * both sums exact, ONE double division at the end, formula text
     * shared verbatim with the oracle (the q_sql_q14 pattern). */
-  def qSqlQ8(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT o_year,
-         |       CAST(CAST(sum(CASE WHEN supp_nation = 'NATION_3'
-         |                 THEN vol ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
-         |            CAST(sum(vol) AS DOUBLE) AS DOUBLE) AS mkt_share,
-         |       count(*) AS n_lines
-         |FROM (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-         |             ${Det.revDec} AS vol,
-         |             n2.n_name AS supp_nation
-         |      FROM ${Tables.sqlRef(s, sf, "part")}
-         |      JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON p_partkey = l_partkey
-         |      JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = l_suppkey
-         |      JOIN ${Tables.sqlRef(s, sf, "orders")}   ON l_orderkey = o_orderkey
-         |      JOIN ${Tables.sqlRef(s, sf, "customer")} ON o_custkey = c_custkey
-         |      JOIN ${Tables.sqlRef(s, sf, "nation")} n1 ON c_nationkey = n1.n_nationkey
-         |      JOIN ${Tables.sqlRef(s, sf, "region")}   ON n1.n_regionkey = r_regionkey
-         |      JOIN ${Tables.sqlRef(s, sf, "nation")} n2 ON s_nationkey = n2.n_nationkey
-         |      WHERE r_name = 'ASIA' AND p_type = 'PROMO'
-         |        AND o_orderdate BETWEEN timestamp'1996-01-01'
-         |                            AND timestamp'1997-12-31') t
-         |GROUP BY o_year ORDER BY o_year""".stripMargin)
+  def qSqlQ8(t: Tables.SqlNames): String =
+    s"""SELECT o_year,
+       |       CAST(CAST(sum(CASE WHEN supp_nation = 'NATION_3'
+       |                 THEN vol ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
+       |            CAST(sum(vol) AS DOUBLE) AS DOUBLE) AS mkt_share,
+       |       count(*) AS n_lines
+       |FROM (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+       |             ${Det.revDec} AS vol,
+       |             n2.n_name AS supp_nation
+       |      FROM ${t("part")}
+       |      JOIN ${t("lineitem")} ON p_partkey = l_partkey
+       |      JOIN ${t("supplier")} ON s_suppkey = l_suppkey
+       |      JOIN ${t("orders")}   ON l_orderkey = o_orderkey
+       |      JOIN ${t("customer")} ON o_custkey = c_custkey
+       |      JOIN ${t("nation")} n1 ON c_nationkey = n1.n_nationkey
+       |      JOIN ${t("region")}   ON n1.n_regionkey = r_regionkey
+       |      JOIN ${t("nation")} n2 ON s_nationkey = n2.n_nationkey
+       |      WHERE r_name = 'ASIA' AND p_type = 'PROMO'
+       |        AND o_orderdate BETWEEN timestamp'1996-01-01'
+       |                            AND timestamp'1997-12-31') t
+       |GROUP BY o_year ORDER BY o_year""".stripMargin
 
   /** TPC-H Q2 shape (minimum-cost supplier) through the text SQL
     * surface — the CORRELATED-MIN-EQUALITY exhibit (Q2's signature
@@ -1154,21 +1139,20 @@ object Relational {
     * equality compares exact decimals (a float min would make ties
     * order-dependent); DISTINCT collapses a supplier hitting the same
     * part's min price on several lineitems. */
-  def qSqlQ2(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT DISTINCT p_partkey, s_suppkey, s_name, n_name,
-         |       CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE) AS best_price
-         |FROM ${Tables.sqlRef(s, sf, "part")} p
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON l_partkey = p_partkey
-         |JOIN ${Tables.sqlRef(s, sf, "supplier")} s ON s_suppkey = l_suppkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")} n ON s_nationkey = n_nationkey
-         |WHERE p_size <= 5
-         |  AND CAST(l_extendedprice AS DECIMAL(12,2)) = (
-         |    SELECT min(CAST(l2.l_extendedprice AS DECIMAL(12,2)))
-         |    FROM ${Tables.sqlRef(s, sf, "lineitem")} l2
-         |    WHERE l2.l_partkey = p.p_partkey)
-         |ORDER BY p_partkey, s_suppkey
-         |LIMIT 100""".stripMargin)
+  def qSqlQ2(t: Tables.SqlNames): String =
+    s"""SELECT DISTINCT p_partkey, s_suppkey, s_name, n_name,
+       |       CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE) AS best_price
+       |FROM ${t("part")} p
+       |JOIN ${t("lineitem")} l ON l_partkey = p_partkey
+       |JOIN ${t("supplier")} s ON s_suppkey = l_suppkey
+       |JOIN ${t("nation")} n ON s_nationkey = n_nationkey
+       |WHERE p_size <= 5
+       |  AND CAST(l_extendedprice AS DECIMAL(12,2)) = (
+       |    SELECT min(CAST(l2.l_extendedprice AS DECIMAL(12,2)))
+       |    FROM ${t("lineitem")} l2
+       |    WHERE l2.l_partkey = p.p_partkey)
+       |ORDER BY p_partkey, s_suppkey
+       |LIMIT 100""".stripMargin
 
   /** TPC-H Q6 shape (forecasting revenue change) through the text SQL
     * surface — the SCAN-DOMINATED exhibit: single table, no join, every
@@ -1178,16 +1162,15 @@ object Relational {
     * predicates in PushedFilters and a two-phase aggregate over the
     * pruned read, nothing else. Exact decimal product sum surfaced as
     * DOUBLE once. */
-  def qSqlQ6(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-         |                CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-         |       count(*) AS n_lines
-         |FROM ${Tables.sqlRef(s, sf, "lineitem")}
-         |WHERE l_shipdate >= timestamp'1997-01-01'
-         |  AND l_shipdate < timestamp'1998-01-01'
-         |  AND l_discount BETWEEN 0.02 AND 0.06
-         |  AND l_quantity < 24""".stripMargin)
+  def qSqlQ6(t: Tables.SqlNames): String =
+    s"""SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
+       |                CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
+       |       count(*) AS n_lines
+       |FROM ${t("lineitem")}
+       |WHERE l_shipdate >= timestamp'1997-01-01'
+       |  AND l_shipdate < timestamp'1998-01-01'
+       |  AND l_discount BETWEEN 0.02 AND 0.06
+       |  AND l_quantity < 24""".stripMargin
 
   /** TPC-H Q9 shape (product-type profit) through the text SQL
     * surface — the PROFIT-EXPRESSION exhibit: revenue minus cost as ONE
@@ -1198,21 +1181,20 @@ object Relational {
     * stands in for the official partsupp supplycost (no partsupp in the
     * fixture) — same expression structure, exact decimals throughout,
     * one DOUBLE cast at the end. */
-  def qSqlQ9(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-         |       CAST(sum(${Det.revDec}
-         |            - CAST(p_retailprice AS DECIMAL(12,2))
-         |              * CAST(l_quantity AS DECIMAL(12,2))
-         |              * CAST(0.60 AS DECIMAL(4,2))) AS DOUBLE) AS profit,
-         |       count(*) AS n_lines
-         |FROM ${Tables.sqlRef(s, sf, "part")}
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} ON p_partkey = l_partkey
-         |JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = l_suppkey
-         |JOIN ${Tables.sqlRef(s, sf, "orders")}   ON o_orderkey = l_orderkey
-         |JOIN ${Tables.sqlRef(s, sf, "nation")}   ON s_nationkey = n_nationkey
-         |WHERE p_name LIKE '%gear%'
-         |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)
+  def qSqlQ9(t: Tables.SqlNames): String =
+    s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
+       |       CAST(sum(${Det.revDec}
+       |            - CAST(p_retailprice AS DECIMAL(12,2))
+       |              * CAST(l_quantity AS DECIMAL(12,2))
+       |              * CAST(0.60 AS DECIMAL(4,2))) AS DOUBLE) AS profit,
+       |       count(*) AS n_lines
+       |FROM ${t("part")}
+       |JOIN ${t("lineitem")} ON p_partkey = l_partkey
+       |JOIN ${t("supplier")} ON s_suppkey = l_suppkey
+       |JOIN ${t("orders")}   ON o_orderkey = l_orderkey
+       |JOIN ${t("nation")}   ON s_nationkey = n_nationkey
+       |WHERE p_name LIKE '%gear%'
+       |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin
 
   /** TPC-H Q12 shape (shipping-mode priority audit) through the text
     * SQL surface — the TWO-WAY CONDITIONAL COUNT exhibit: one pass over
@@ -1222,19 +1204,18 @@ object Relational {
     * stands in for l_shipmode as the grouping key, and "late" = shipped
     * >30 days after the order date replaces the commit/receipt
     * comparison. Exact integer counts. */
-  def qSqlQ12(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""SELECT l_returnflag,
-         |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-         |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-         |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-         |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-         |FROM ${Tables.sqlRef(s, sf, "orders")} o
-         |JOIN ${Tables.sqlRef(s, sf, "lineitem")} l ON o_orderkey = l_orderkey
-         |WHERE l_shipdate >= timestamp'1997-01-01'
-         |  AND l_shipdate < timestamp'1998-01-01'
-         |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+  def qSqlQ12(t: Tables.SqlNames): String =
+    s"""SELECT l_returnflag,
+       |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+       |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+       |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+       |FROM ${t("orders")} o
+       |JOIN ${t("lineitem")} l ON o_orderkey = l_orderkey
+       |WHERE l_shipdate >= timestamp'1997-01-01'
+       |  AND l_shipdate < timestamp'1998-01-01'
+       |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
+       |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
   /** TPC-H Q11 shape (important stock identification) through the text
     * SQL surface — the GLOBAL-SCALAR-HAVING exhibit: a grouped aggregate
@@ -1256,31 +1237,30 @@ object Relational {
     * the supplier dim before the join, the global scalar is one
     * broadcast row; production would widen the cents comparison to
     * DECIMAL before t·10⁴ could reach 2⁶³. */
-  def qSqlQ11(s: SparkSession, sf: String): DataFrame =
-    s.sql(
-      s"""WITH sc AS (SELECT count(*) AS s FROM ${Tables.sqlRef(s, sf, "supplier")}),
-         |i4 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL SELECT 3),
-         |ps AS (
-         |  SELECT DISTINCT p_partkey AS ps_partkey,
-         |         (p_partkey + i4.i * (sc.s div 4 + p_partkey div sc.s)) % sc.s AS ps_suppkey
-         |  FROM ${Tables.sqlRef(s, sf, "part")} CROSS JOIN i4 CROSS JOIN sc),
-         |ps2 AS (
-         |  SELECT ps_partkey, ps_suppkey,
-         |         (ps_partkey * 47 + ps_suppkey * 31) % 9999 + 1 AS ps_availqty,
-         |         (ps_partkey * 13 + ps_suppkey * 7) % 99900 + 100 AS ps_cost_cents
-         |  FROM ps),
-         |filtered AS (
-         |  SELECT ps_partkey, CAST(sum(ps_cost_cents * ps_availqty) AS BIGINT) AS v_cents
-         |  FROM ps2
-         |  JOIN ${Tables.sqlRef(s, sf, "supplier")} ON s_suppkey = ps_suppkey
-         |  JOIN ${Tables.sqlRef(s, sf, "nation")} ON n_nationkey = s_nationkey
-         |  WHERE n_name = 'NATION_15'
-         |  GROUP BY ps_partkey),
-         |tot AS (SELECT CAST(sum(v_cents) AS BIGINT) AS t FROM filtered)
-         |SELECT ps_partkey, CAST(v_cents AS DOUBLE) / 100.0 AS value
-         |FROM filtered CROSS JOIN tot
-         |WHERE v_cents * 10000 > t * 10
-         |ORDER BY value DESC, ps_partkey""".stripMargin)
+  def qSqlQ11(t: Tables.SqlNames): String =
+    s"""WITH sc AS (SELECT count(*) AS s FROM ${t("supplier")}),
+       |i4 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL SELECT 3),
+       |ps AS (
+       |  SELECT DISTINCT p_partkey AS ps_partkey,
+       |         (p_partkey + i4.i * (sc.s div 4 + p_partkey div sc.s)) % sc.s AS ps_suppkey
+       |  FROM ${t("part")} CROSS JOIN i4 CROSS JOIN sc),
+       |ps2 AS (
+       |  SELECT ps_partkey, ps_suppkey,
+       |         (ps_partkey * 47 + ps_suppkey * 31) % 9999 + 1 AS ps_availqty,
+       |         (ps_partkey * 13 + ps_suppkey * 7) % 99900 + 100 AS ps_cost_cents
+       |  FROM ps),
+       |filtered AS (
+       |  SELECT ps_partkey, CAST(sum(ps_cost_cents * ps_availqty) AS BIGINT) AS v_cents
+       |  FROM ps2
+       |  JOIN ${t("supplier")} ON s_suppkey = ps_suppkey
+       |  JOIN ${t("nation")} ON n_nationkey = s_nationkey
+       |  WHERE n_name = 'NATION_15'
+       |  GROUP BY ps_partkey),
+       |tot AS (SELECT CAST(sum(v_cents) AS BIGINT) AS t FROM filtered)
+       |SELECT ps_partkey, CAST(v_cents AS DOUBLE) / 100.0 AS value
+       |FROM filtered CROSS JOIN tot
+       |WHERE v_cents * 10000 > t * 10
+       |ORDER BY value DESC, ps_partkey""".stripMargin
 
   /** TPC-H Q1 (pricing summary) through the text SQL surface — the SQL
     * twin of the DataFrame flagship [[qAggQ1]]: same exact decimal
@@ -1288,27 +1268,29 @@ object Relational {
     * instead of the fluent API. With this (and [[qSqlQ11]]'s derived
     * partsupp) the SQL surface carries all 22 TPC-H shapes on this
     * schema — a user can run the whole suite as text. */
-  def qSqlQ1(s: SparkSession, sf: String): DataFrame =
-    // FROM rides the layout-gated scan-spread (Tables.spreadFrom): the
-    // bare table ref at production layouts, a REPARTITION(l_orderkey)
-    // subquery when the input cannot split wide enough to parallelize
-    // the decimal-lane partial agg
-    s.sql(
-      s"""SELECT l_returnflag, l_linestatus,
-         |       ${sumDec2("l_quantity")} AS sum_qty,
-         |       ${sumDec2("l_extendedprice")} AS sum_base_price,
-         |       ${sumAsDouble(revDec)} AS sum_disc_price,
-         |       ${sumAsDouble(chargeDec)} AS sum_charge,
-         |       ${avgDec2("l_quantity")} AS avg_qty,
-         |       ${avgDec2("l_extendedprice")} AS avg_price,
-         |       ${avgDec2("l_discount")} AS avg_disc,
-         |       count(*) AS count_order
-         |FROM ${Tables.spreadFrom(s, sf, "lineitem", "l_orderkey")}
-         |WHERE l_shipdate <= timestamp'2000-01-01'
-         |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin)
+  def qSqlQ1(t: Tables.SqlNames): String =
+    // FROM rides the layout-gated scan-spread (`t.spread`, which is
+    // Tables.spreadFrom for Spark): the bare table ref at production
+    // layouts, a REPARTITION(l_orderkey) subquery when the input cannot
+    // split wide enough to parallelize the decimal-lane partial agg
+    s"""SELECT l_returnflag, l_linestatus,
+       |       ${sumDec2("l_quantity")} AS sum_qty,
+       |       ${sumDec2("l_extendedprice")} AS sum_base_price,
+       |       ${sumAsDouble(revDec)} AS sum_disc_price,
+       |       ${sumAsDouble(chargeDec)} AS sum_charge,
+       |       ${avgDec2("l_quantity")} AS avg_qty,
+       |       ${avgDec2("l_extendedprice")} AS avg_price,
+       |       ${avgDec2("l_discount")} AS avg_disc,
+       |       count(*) AS count_order
+       |FROM ${t.spread("lineitem", "l_orderkey")}
+       |WHERE l_shipdate <= timestamp'2000-01-01'
+       |GROUP BY l_returnflag, l_linestatus
+       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The text-SQL queries, each written once: Spark runs the text over
+    * [[graft.Tables.sqlNames]], and its DuckDB oracle is the same text
+    * over [[graft.Tables.bareNames]]. */
+  private[graft] val sqlTexts: Map[String, Tables.SqlNames => String] = Map(
     "q_sql_q1" -> qSqlQ1 _,
     "q_sql_q11" -> qSqlQ11 _,
     "q_sql_q6" -> qSqlQ6 _,
@@ -1331,6 +1313,12 @@ object Relational {
     "q_sql_q19" -> qSqlQ19 _,
     "q_sql_q22" -> qSqlQ22 _,
     "q_sql_q3" -> qSqlQ3 _,
+  )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    sqlTexts.map { case (q, text) =>
+      q -> ((s: SparkSession, sf: String) => s.sql(text(Tables.sqlNames(s, sf))))
+    } ++ Map(
     "q_join_lateral" -> qJoinLateral _,
     "q_recursive_cte" -> qRecursiveCte _,
     "q_agg_salted" -> qAggSalted _,
@@ -1386,7 +1374,12 @@ object Relational {
     "q_except" -> qExcept _,
   )
 
-  val oracle: Map[String, String] = Map(
+  // A text-SQL query's oracle is its own text with bare table names; an
+  // entry below replaces it only where the Spark text is a rewrite that
+  // DuckDB must prove equivalent, or spells what DuckDB cannot parse.
+  val oracle: Map[String, String] = sqlTexts.map { case (q, text) =>
+    q -> text(Tables.bareNames)
+  } ++ Map(
     "q_join_lateral" ->
       """SELECT n_nationkey, n_name, c_custkey, c_acctbal
         |FROM nation, LATERAL (
@@ -1407,59 +1400,10 @@ object Relational {
       """SELECT l_returnflag, count(*) AS cnt,
         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sql_q7" ->
-      s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-         |       CAST(year(l_shipdate) AS INT) AS l_year,
-         |       ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM supplier
-         |JOIN lineitem ON s_suppkey = l_suppkey
-         |JOIN orders   ON o_orderkey = l_orderkey
-         |JOIN customer ON c_custkey = o_custkey
-         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-         |WHERE n1.n_nationkey < 12 AND n2.n_nationkey < 12
-         |  AND n1.n_nationkey <> n2.n_nationkey
-         |GROUP BY 1, 2, 3
-         |ORDER BY 1, 2, 3""".stripMargin,
-    "q_sql_q5" ->
-      s"""SELECT n_name, ${sumAsDouble(revDec)} AS revenue, count(*) AS n_items
-         |FROM customer
-         |JOIN orders   ON c_custkey = o_custkey
-         |JOIN lineitem ON l_orderkey = o_orderkey
-         |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         |JOIN nation   ON s_nationkey = n_nationkey
-         |JOIN region   ON n_regionkey = r_regionkey
-         |WHERE r_name = 'ASIA'
-         |  AND o_orderdate >= timestamp'1996-01-01'
-         |  AND o_orderdate < timestamp'1997-01-01'
-         |GROUP BY n_name
-         |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q_sql_q6" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) *
-        |                CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue,
-        |       count(*) AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= timestamp'1997-01-01'
-        |  AND l_shipdate < timestamp'1998-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.06
-        |  AND l_quantity < 24""".stripMargin,
-    "q_sql_q9" ->
-      s"""SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-         |       CAST(sum(${Det.revDec}
-         |            - CAST(p_retailprice AS DECIMAL(12,2))
-         |              * CAST(l_quantity AS DECIMAL(12,2))
-         |              * CAST(0.60 AS DECIMAL(4,2))) AS DOUBLE) AS profit,
-         |       count(*) AS n_lines
-         |FROM part
-         |JOIN lineitem ON p_partkey = l_partkey
-         |JOIN supplier ON s_suppkey = l_suppkey
-         |JOIN orders   ON o_orderkey = l_orderkey
-         |JOIN nation   ON s_nationkey = n_nationkey
-         |WHERE p_name LIKE '%gear%'
-         |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    // identical derivation text modulo div spelling (Spark `div`,
-    // DuckDB `//`) and table paths — the partsupp stand-in is pure
-    // integer key arithmetic, so both engines rebuild the same relation
+    // own oracle: DuckDB spells integer division `//` where Spark writes
+    // `div`. Otherwise the derivation text is identical — the partsupp
+    // stand-in is pure integer key arithmetic, so both engines rebuild
+    // the same relation
     "q_sql_q11" ->
       """WITH sc AS (SELECT count(*) AS s FROM supplier),
         |i4 AS (SELECT 0 AS i UNION ALL SELECT 1 UNION ALL SELECT 2 UNION ALL SELECT 3),
@@ -1484,52 +1428,9 @@ object Relational {
         |FROM filtered CROSS JOIN tot
         |WHERE v_cents * 10000 > t * 10
         |ORDER BY value DESC, ps_partkey""".stripMargin,
-    "q_sql_q12" ->
-      """SELECT l_returnflag,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders o
-        |JOIN lineitem l ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= timestamp'1997-01-01'
-        |  AND l_shipdate < timestamp'1998-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_sql_q2" ->
-      """SELECT DISTINCT p_partkey, s_suppkey, s_name, n_name,
-        |       CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE) AS best_price
-        |FROM part p
-        |JOIN lineitem l ON l_partkey = p_partkey
-        |JOIN supplier s ON s_suppkey = l_suppkey
-        |JOIN nation n ON s_nationkey = n_nationkey
-        |WHERE p_size <= 5
-        |  AND CAST(l_extendedprice AS DECIMAL(12,2)) = (
-        |    SELECT min(CAST(l2.l_extendedprice AS DECIMAL(12,2)))
-        |    FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-        |ORDER BY p_partkey, s_suppkey
-        |LIMIT 100""".stripMargin,
-    "q_sql_q8" ->
-      s"""SELECT o_year,
-         |       CAST(CAST(sum(CASE WHEN supp_nation = 'NATION_3'
-         |                 THEN vol ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
-         |            CAST(sum(vol) AS DOUBLE) AS DOUBLE) AS mkt_share,
-         |       count(*) AS n_lines
-         |FROM (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-         |             ${Det.revDec} AS vol,
-         |             n2.n_name AS supp_nation
-         |      FROM part
-         |      JOIN lineitem ON p_partkey = l_partkey
-         |      JOIN supplier ON s_suppkey = l_suppkey
-         |      JOIN orders   ON l_orderkey = o_orderkey
-         |      JOIN customer ON o_custkey = c_custkey
-         |      JOIN nation n1 ON c_nationkey = n1.n_nationkey
-         |      JOIN region   ON n1.n_regionkey = r_regionkey
-         |      JOIN nation n2 ON s_nationkey = n2.n_nationkey
-         |      WHERE r_name = 'ASIA' AND p_type = 'PROMO'
-         |        AND o_orderdate BETWEEN timestamp'1996-01-01'
-         |                            AND timestamp'1997-12-31') t
-         |GROUP BY o_year ORDER BY o_year""".stripMargin,
+    // own oracle: the Spark text drops TPC-H's redundant `orders o3`
+    // re-join ([[qSqlQ21]]); this textbook form lets DuckDB prove the
+    // rewrite equivalent
     "q_sql_q21" ->
       """SELECT s_name, count(*) AS numwait
         |FROM supplier s
@@ -1549,141 +1450,6 @@ object Relational {
         |                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 60 DAY)
         |GROUP BY s_name ORDER BY numwait DESC, s_name
         |LIMIT 50""".stripMargin,
-    "q_sql_q13" ->
-      """SELECT c_count, count(*) AS custdist
-        |FROM (SELECT c_custkey, count(o_orderkey) AS c_count
-        |      FROM customer c
-        |      LEFT OUTER JOIN orders o
-        |        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |      GROUP BY c_custkey) c_orders
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_sql_q16" ->
-      """SELECT p_brand, p_type, p_size,
-        |       count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem l
-        |JOIN part p ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#1'
-        |  AND p_type NOT LIKE 'PROMO%'
-        |  AND p_size IN (1, 4, 9, 16, 25, 36, 49, 50)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                        WHERE s_acctbal < 600)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        |LIMIT 40""".stripMargin,
-    "q_sql_q20" ->
-      """SELECT s_suppkey, s_name, s_acctbal
-        |FROM supplier
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem
-        |  WHERE l_partkey IN (SELECT p_partkey FROM part
-        |                      WHERE p_name LIKE 'small%')
-        |    AND l_shipdate >= timestamp'1997-01-01'
-        |    AND l_shipdate < timestamp'1998-01-01'
-        |  GROUP BY l_suppkey, l_partkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 50)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q_sql_q10" ->
-      s"""SELECT c_custkey, c_name, ${Det.sumAsDouble(Det.revDec)} AS revenue,
-         |       c_acctbal, n_name
-         |FROM customer c
-         |JOIN orders o ON c_custkey = o_custkey
-         |JOIN lineitem l ON l_orderkey = o_orderkey
-         |JOIN nation n ON c_nationkey = n_nationkey
-         |WHERE o_orderdate >= timestamp'1997-01-01'
-         |  AND o_orderdate < timestamp'1997-04-01'
-         |  AND l_returnflag = 'R'
-         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-         |ORDER BY revenue DESC, c_custkey
-         |LIMIT 20""".stripMargin,
-    "q_sql_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= timestamp'1997-01-01'
-        |  AND o_orderdate < timestamp'1997-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_sql_q15" ->
-      s"""WITH revenue AS (
-         |  SELECT l_suppkey AS supplier_no, sum($revDec) AS total_rev
-         |  FROM lineitem
-         |  WHERE l_shipdate >= timestamp'1997-01-01'
-         |    AND l_shipdate < timestamp'1997-04-01'
-         |  GROUP BY l_suppkey)
-         |SELECT s_suppkey, s_name, ${liftDec4("total_rev")} AS total_rev
-         |FROM supplier
-         |JOIN revenue ON s_suppkey = supplier_no
-         |WHERE total_rev = (SELECT max(total_rev) FROM revenue)
-         |ORDER BY s_suppkey""".stripMargin,
-    "q_sql_q17" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-        |       count(*) AS n_lines
-        |FROM lineitem l
-        |JOIN part p ON p_partkey = l_partkey
-        |WHERE p_size <= 10 AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
-        |  AND CAST(l_quantity AS DECIMAL(12,2)) * 5 *
-        |      (SELECT count(*) FROM lineitem l2
-        |       WHERE l2.l_partkey = p.p_partkey)
-        |    < (SELECT sum(CAST(l_quantity AS DECIMAL(12,2)))
-        |       FROM lineitem l2
-        |       WHERE l2.l_partkey = p.p_partkey)""".stripMargin,
-    "q_sql_q22" ->
-      s"""WITH pool AS (
-         |  SELECT c_custkey, c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)) AS bal
-         |  FROM customer
-         |  WHERE c_nationkey IN (1, 3, 7, 12, 17, 20, 24))
-         |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-         |       ${liftDec2("sum(bal)")} AS totacctbal
-         |FROM pool c
-         |WHERE bal * (SELECT count(*) FROM pool WHERE bal > 0.00)
-         |      > (SELECT sum(bal) FROM pool WHERE bal > 0.00)
-         |  AND NOT EXISTS (SELECT 1 FROM orders o
-         |                  WHERE o.o_custkey = c.c_custkey
-         |                    AND o.o_orderpriority = '1-URGENT')
-         |GROUP BY c_nationkey ORDER BY cntrycode""".stripMargin,
-    "q_sql_q19" ->
-      s"""SELECT ${Det.sumAsDouble(Det.revDec)} AS revenue, count(*) AS n_lines
-         |FROM lineitem l
-         |JOIN part p ON p_partkey = l_partkey
-         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 5 AND 30 AND l_quantity BETWEEN 10 AND 35)
-         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 50 AND l_quantity BETWEEN 25 AND 50)""".stripMargin,
-    "q_sql_q14" ->
-      s"""SELECT CAST(100.00 * CAST(sum(CASE WHEN p_type = 'PROMO'
-         |         THEN ${Det.revDec} ELSE CAST(0 AS DECIMAL(16,4)) END) AS DOUBLE) /
-         |       ${Det.sumAsDouble(Det.revDec)} AS DOUBLE) AS promo_share,
-         |       count(*) AS n_lines
-         |FROM lineitem l
-         |JOIN part p ON l_partkey = p_partkey
-         |WHERE l_shipdate >= timestamp'1998-01-01'
-         |  AND l_shipdate < timestamp'1998-04-01'""".stripMargin,
-    "q_sql_q18" ->
-      """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS total_qty
-        |FROM customer c
-        |JOIN orders o ON c_custkey = o_custkey
-        |JOIN lineitem l ON o_orderkey = l_orderkey
-        |WHERE o_orderkey IN (
-        |  SELECT l_orderkey FROM lineitem
-        |  GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(12,2))) > 250)
-        |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 100""".stripMargin,
-    "q_sql_q3" ->
-      s"""SELECT l_orderkey, ${sumAsDouble(revDec)} AS revenue,
-         |       o_orderdate, o_orderpriority
-         |FROM customer c
-         |JOIN orders o ON c.c_custkey = o.o_custkey
-         |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-         |WHERE c.c_mktsegment = 'BUILDING'
-         |  AND o.o_orderdate < timestamp'1998-07-01'
-         |  AND l.l_shipdate > timestamp'1998-07-01'
-         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-         |ORDER BY revenue DESC, l_orderkey
-         |LIMIT 10""".stripMargin,
     "q_scan_project" ->
       "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem ORDER BY l_orderkey, l_linenumber",
     "q_scan_count" ->
@@ -1833,30 +1599,8 @@ object Relational {
         |FROM capped WHERE rn <= 2
         |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
         |LIMIT 20""".stripMargin,
-    "q_sql_q1" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |       ${sumDec2("l_quantity")} AS sum_qty,
-         |       ${sumDec2("l_extendedprice")} AS sum_base_price,
-         |       ${sumAsDouble(revDec)} AS sum_disc_price,
-         |       ${sumAsDouble(chargeDec)} AS sum_charge,
-         |       ${avgDec2("l_quantity")} AS avg_qty,
-         |       ${avgDec2("l_extendedprice")} AS avg_price,
-         |       ${avgDec2("l_discount")} AS avg_disc,
-         |       count(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-01-01'
-         |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_q1" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |       ${sumDec2("l_quantity")} AS sum_qty,
-         |       ${sumDec2("l_extendedprice")} AS sum_base_price,
-         |       ${sumAsDouble(revDec)} AS sum_disc_price,
-         |       ${sumAsDouble(chargeDec)} AS sum_charge,
-         |       ${avgDec2("l_quantity")} AS avg_qty,
-         |       ${avgDec2("l_extendedprice")} AS avg_price,
-         |       ${avgDec2("l_discount")} AS avg_disc,
-         |       count(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-01-01'
-         |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
+    // the DataFrame flagship and its SQL twin share Q1's one text
+    "q_agg_q1" -> qSqlQ1(Tables.bareNames),
     "q_agg_distinct" ->
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(*) AS n
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,

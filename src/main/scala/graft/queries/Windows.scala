@@ -285,6 +285,14 @@ object Windows {
     "q_attribution" -> qAttribution _,
   )
 
+  private val winRankSql =
+    """SELECT o_orderpriority,
+      |       row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn,
+      |       o_orderkey, o_totalprice,
+      |       rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk,
+      |       dense_rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS drnk
+      |FROM orders ORDER BY o_orderpriority, rn""".stripMargin
+
   val oracle: Map[String, String] = Map(
     // DuckDB's windowed median IS quantile_cont(0.5): odd frames take the
     // element, even frames interpolate halfway between two exact small
@@ -326,22 +334,10 @@ object Windows {
         |SELECT user_id, session_id, count(*) AS n_events,
         |       min(ts) AS session_start, max(ts) AS session_end
         |FROM sess GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    "q_win_rank" ->
-      """SELECT o_orderpriority,
-        |       row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn,
-        |       o_orderkey, o_totalprice,
-        |       rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk,
-        |       dense_rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS drnk
-        |FROM orders ORDER BY o_orderpriority, rn""".stripMargin,
+    "q_win_rank" -> winRankSql,
     // the scale-safe twin's contract IS value-identity with the flat
-    // windows, so its oracle is q_win_rank's text verbatim
-    "q_win_rank_scaled" ->
-      """SELECT o_orderpriority,
-        |       row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey) AS rn,
-        |       o_orderkey, o_totalprice,
-        |       rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS rnk,
-        |       dense_rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC) AS drnk
-        |FROM orders ORDER BY o_orderpriority, rn""".stripMargin,
+    // windows, so its oracle is q_win_rank's one text
+    "q_win_rank_scaled" -> winRankSql,
     "q_win_running" ->
       """SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))

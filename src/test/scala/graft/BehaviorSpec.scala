@@ -503,7 +503,7 @@ class BehaviorSpec extends SparkSuite {
   }
 
   test("sql_q18: every order in the result truly exceeds the quantity threshold") {
-    val res = queries.Relational.qSqlQ18(spark, sf001).collect()
+    val res = queries.Relational.queries("q_sql_q18")(spark, sf001).collect()
     assert(res.nonEmpty, "threshold too high for sf0.001 fixture")
     val qtyByOrder = Tables.lineitem(spark, sf001).groupBy("l_orderkey")
       .agg(sum("l_quantity").as("q")).collect()

@@ -882,7 +882,7 @@ class InvariantSpec extends SparkSuite {
       ship.getOrElse(k, Array.empty[java.time.LocalDateTime])
         .exists(_.isAfter(d.plusDays(60))) }
     val model = late.groupBy(_._2).map { case (p, g) => p -> g.length.toLong }
-    val out = Relational.qSqlQ4(spark, sf001).collect()
+    val out = Relational.queries("q_sql_q4")(spark, sf001).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(out.nonEmpty && out == model,
       s"q4 priority counts diverge from the replay: got $out want $model")
@@ -910,7 +910,7 @@ class InvariantSpec extends SparkSuite {
         n += 1
       }
     }
-    val out = Relational.qSqlQ19(spark, sf001).collect()
+    val out = Relational.queries("q_sql_q19")(spark, sf001).collect()
     assert(out.length == 1 && out(0).getLong(1) == n)
     assert(out(0).getDouble(0) == rev.toDouble, s"q19 revenue diverges: ${out(0).getDouble(0)} vs $rev")
   }
@@ -934,7 +934,7 @@ class InvariantSpec extends SparkSuite {
     val t = byPart.values.sum
     val model = byPart.filter { case (_, v) => v * 10000 > t * 10 }
       .map { case (p, v) => (p, v.toDouble / 100.0) }
-    val out = Relational.qSqlQ11(spark, sf001).collect()
+    val out = Relational.queries("q_sql_q11")(spark, sf001).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toMap
     assert(out == model, s"q11 diverges from the replay (got ${out.size} rows, want ${model.size})")
     assert(out.nonEmpty && out.size < byPart.size,

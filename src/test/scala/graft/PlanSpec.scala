@@ -306,7 +306,7 @@ class PlanSpec extends SparkSuite {
   }
 
   // the declared cross join, q_join_cross, plans as a nested loop (`nestedLoops`)
-  test("no query plans a CartesianProduct except the declared cross join") {
+  test("no query plans a CartesianProduct") {
     assert(having("cart").isEmpty, s"cartesian products: ${having("cart")}")
   }
 
@@ -393,5 +393,28 @@ class PlanSpec extends SparkSuite {
       assert(bare == Tables.sqlRef(spark, sf001, "lineitem") && !bare.contains("REPARTITION"),
         "wide input must keep the bare table ref")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", was)
+  }
+
+  test("Tables.evict forgets the spread gate's table sizes") {
+    // at 64 KiB splits the gate's volume bound is 8 KiB: a table under it
+    // spreads, and after a ~20 KiB file lands under it and the session
+    // evicts, the gate must decide on the new size
+    val sf = java.nio.file.Files.createTempDirectory("spread_sizes").toString
+    val dir = s"$sf/lineitem.parquet"
+    def bytes = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
+      .map(_.length).sum
+    spark.range(50).toDF("l_orderkey").coalesce(1).write.parquet(dir)
+    SessionConfs.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "65536") {
+      assert(bytes < 8 * 1024)
+      assert(Tables.spreadFrom(spark, sf, "lineitem", "l_orderkey")
+        .startsWith("(SELECT /*+ REPARTITION"), "a small table must get the hint subquery")
+      spark.range(2500).selectExpr("CAST(rand(7) * 9e18 AS BIGINT) AS l_orderkey")
+        .coalesce(1).write.mode("append").parquet(dir)
+      assert(bytes > 16 * 1024 && bytes < 64 * 1024)
+      Tables.evict(spark)
+      assert(Tables.spreadFrom(spark, sf, "lineitem", "l_orderkey") ==
+        Tables.sqlRef(spark, sf, "lineitem"), "the grown table must keep the bare ref")
+    }
+    Tables.evict(spark)
   }
 }

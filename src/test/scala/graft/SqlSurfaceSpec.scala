@@ -20,6 +20,27 @@ class SqlSurfaceSpec extends SparkSuite {
     assert(Tables.names.forall(t => spark.sql(s"SELECT * FROM $t LIMIT 1").count() == 1))
   }
 
+  test("each derived q_sql_* oracle is the query's own text and returns its rows") {
+    // the renderer's bare names bind to registerTables' plain views, the
+    // same names the DuckDB oracle reads; a mis-bound table or a leaked
+    // Spark-only ref or hint fails here, not only at the DuckDB gate
+    Tables.registerTables(spark, sf001)
+    val handWritten = Set("q_sql_q11", "q_sql_q21")
+    val oracle = SparkEntry.oracleSql
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    assert(queries.Relational.sqlTexts.size == 22)
+    queries.Relational.sqlTexts.foreach { case (q, text) =>
+      val bare = text(Tables.bareNames)
+      if (handWritten(q)) assert(oracle(q) != bare, s"$q keeps its own oracle")
+      else {
+        assert(oracle(q) == bare, s"$q's oracle must be its rendered text")
+        assert(!bare.contains("__graft_") && !bare.contains("/*+"), s"$q: $bare")
+        assert(rows(spark.sql(bare)) == rows(SparkEntry.queries(q)(spark, sf001)), q)
+      }
+    }
+    assert(oracle("q_agg_q1") == oracle("q_sql_q1"))
+  }
+
   test("graft_kll_quantile takes a decimal rank literal like a double one") {
     graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
